@@ -29,11 +29,16 @@ final class Checkpoints(spark: SparkSession, workDir: String) {
       Files.exists(Paths.get(metricsPath(name)))
 
   /** Read a completed stage's table directly — the RESUME entry point.
+    * Refuses an incomplete stage (no `_SUCCESS` marker or no metrics
+    * sidecar): a crash mid-write must not resume from a partial table.
     * For a stage written with `partitionBy`, a filter on the partition
     * column prunes at the scan: a 100 TB resume that needs one bucket
     * reads one directory, not the whole checkpoint (PlanSpec-gated).
     */
-  def load(name: String): DataFrame = spark.read.parquet(path(name))
+  def load(name: String): DataFrame = {
+    require(isComplete(name), s"checkpoint stage $name is not complete")
+    spark.read.parquet(path(name))
+  }
 
   /** Compute-or-load a stage. On compute: write parquet, then ONE read-back
     * job derives the row total and per-file lineage (the files ARE the
@@ -91,20 +96,9 @@ object Checkpoints {
     */
   def skewMetricsJson(feats: DataFrame, cfg: graft.model.DedupConfig): String = {
     import graft.block.Blocking
-    import graft.sig.Signatures
-    // the stats run over the SAME long keys the pipeline blocks on
-    // (Blocking.keyedUnion's three namespaces), so the sidecar reports the
-    // real buckets, not a parallel reconstruction
-    val sig = Signatures.minHashFromIntHashesCol(col("shs"), cfg)
-    val passes = Seq(
-      "lsh" -> feats.select(col("id"),
-        explode(Signatures.bandHashKeysCol(sig, cfg.bands)).as("key")),
-      "simhash" -> feats.select(col("id"),
-        explode(Blocking.packedBitBlockKeys(col("simhash"),
-          cfg.simhashBits / cfg.simhashBandBits, cfg.simhashBits, 1L)).as("key")),
-      "phash" -> feats.select(col("id"),
-        explode(Blocking.packedBitBlockKeys(col("phash"), cfg.phashBlocks, 64, 2L)).as("key")))
-    passes.map { case (name, keyed) =>
+    // the stats run over the SAME keyed passes the pipeline blocks on, so
+    // the sidecar reports the real buckets, not a parallel reconstruction
+    Blocking.keyedPasses(feats, cfg).map { case (name, keyed) =>
       val r = Blocking.bucketStats(keyed, cfg.maxBucketSize).head()
       s"""{"pass":"$name","n_buckets":${r.getLong(0)},"n_dropped_buckets":${r.getLong(1)},""" +
         s""""pairs_dropped":${r.getLong(2)},"max_bucket":${r.getLong(3)}}"""

@@ -3,6 +3,7 @@ package graft.block
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.SigExprs
 import graft.model.DedupConfig
 import graft.sig.Signatures
 
@@ -72,29 +73,10 @@ object Blocking {
       case Some(cap) => size(col("ids")).between(2, cap)
       case None => size(col("ids")) >= 2
     }
-    val ids = col("ids")
-    val isLongId = buckets.schema("ids").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, _) => true
-      case _ => false
-    }
-    // pair expansion: i<j index pairs, canonicalized (min, max) — matching
-    // the oracle's `a.doc_id < b.doc_id`. Long ids (every corpus-scale
-    // caller) go through the codegen'd native kernel; the HOF chain below
-    // computes the same pairs for other id types but evaluates INTERPRETED
-    // (Catalyst never codegens higher-order functions), which at millions
-    // of within-bucket pairs dominates the blocking stage.
-    val pairs =
-      if (isLongId) graft.functions.SigExprs.pairLongIds(ids)
-      else flatten(transform(ids, (x, i) =>
-        transform(slice(ids, i + lit(2), greatest(size(ids) - i - 1, lit(0))), y =>
-          struct(least(x, y).as("id1"), greatest(x, y).as("id2")))))
-    val expanded = buckets
-      .where(capped)
-      .select(explode(pairs).as("p"))
-      .select(col("p.id1"), col("p.id2"))
-    // the native kernel already drops id1 == id2 pairs
-    if (isLongId) expanded else expanded.where(col("id1") =!= col("id2"))
+    // pair expansion: i<j index pairs, canonicalized (min, max) and with
+    // equal ids dropped — matching the oracle's `a.doc_id < b.doc_id` — by
+    // one codegen'd generator for long and string ids alike
+    buckets.where(capped).select(SigExprs.bucketPairs(col("ids")))
   }
 
   /** Skew observability: per-pass bucket statistics — how many keys, how
@@ -131,7 +113,7 @@ object Blocking {
     * (injective per pass), no hashing, no strings. Requires per <= 52 and
     * tag in 1..3 (tag 0 is the hashed-LSH-key namespace).
     */
-  def packedBitBlockKeys(hCol: Column, blocks: Int, totalBits: Int, tag: Long): Column = {
+  private def packedBitBlockKeys(hCol: Column, blocks: Int, totalBits: Int, tag: Long): Column = {
     val per = totalBits / blocks
     require(per <= 52 && tag >= 1 && tag <= 3, s"packed key layout overflow: per=$per tag=$tag")
     val mask = (1L << per) - 1
@@ -141,38 +123,30 @@ object Blocking {
     }: _*)
   }
 
-  /** Union of the three hash-keyed blocking passes as ONE (id, key) index
-    * with 8-byte LONG keys: hashed LSH band keys (58-bit, high tag bits 0),
-    * packed simhash blocks (tag 1), packed phash blocks (tag 2) — the
-    * namespaces are disjoint by construction, so buckets never mix across
-    * passes. One downstream groupBy pairs all three passes in a single
-    * shuffle, moving 8 bytes per key instead of a ~30-char string.
+  /** The three hash-keyed blocking passes of the flagship as named (id,
+    * key) frames with 8-byte LONG keys: hashed LSH band keys ("lsh",
+    * 58-bit, high tag bits 0), packed simhash blocks ("simhash", tag 1),
+    * packed phash blocks ("phash", tag 2). The namespaces are disjoint by
+    * construction, so the passes can share one key space. This is the
+    * only place the key layout is built: the pipeline pairs their union
+    * ([[keyedUnion]]) and the skew reports bucket each pass on its own.
     */
-  def keyedUnion(feats: DataFrame, cfg: DedupConfig): DataFrame = {
+  def keyedPasses(feats: DataFrame, cfg: DedupConfig): Seq[(String, DataFrame)] = {
     val sig = Signatures.minHashFromIntHashesCol(col("shs"), cfg)
-    val lsh = feats.select(col("id"),
-      explode(Signatures.bandHashKeysCol(sig, cfg.bands)).as("key"))
-    val sim = feats.select(col("id"),
-      explode(packedBitBlockKeys(col("simhash"),
-        cfg.simhashBits / cfg.simhashBandBits, cfg.simhashBits, 1L)).as("key"))
-    val ph = feats.select(col("id"),
-      explode(packedBitBlockKeys(col("phash"), cfg.phashBlocks, 64, 2L)).as("key"))
-    lsh.unionAll(sim).unionAll(ph)
+    def keyed(keys: Column) = feats.select(col("id"), explode(keys).as("key"))
+    Seq(
+      "lsh" -> keyed(Signatures.bandHashKeysCol(sig, cfg.bands)),
+      "simhash" -> keyed(packedBitBlockKeys(col("simhash"),
+        cfg.simhashBits / cfg.simhashBandBits, cfg.simhashBits, 1L)),
+      "phash" -> keyed(packedBitBlockKeys(col("phash"), cfg.phashBlocks, 64, 2L)))
   }
 
-  /** MinHash/LSH blocking pass over a HASHED shingle-array column
-    * (array<long> of hash60 values — see Pipeline.features).
-    * records(idCol, shinglesCol) -> canonical candidate pairs.
-    * Cost model: numHashes mins per record (map-side), `bands` keys shuffled
-    * per record, no payload movement.
+  /** Union of the [[keyedPasses]] as ONE (id, key) index: buckets never mix
+    * across passes, so one downstream groupBy pairs all three passes in a
+    * single shuffle, moving 8 bytes per key instead of a ~30-char string.
     */
-  def lshPairs(records: DataFrame, idCol: String, shinglesCol: String,
-               cfg: DedupConfig, cap: Option[Int] = None): DataFrame = {
-    val sig = Signatures.minHashFromHashesCol(col(shinglesCol), cfg)
-    val keyed = records
-      .select(col(idCol).as("id"), explode(Signatures.bandKeysCol(sig, cfg.bands)).as("key"))
-    pairsFromKeys(keyed, cap)
-  }
+  def keyedUnion(feats: DataFrame, cfg: DedupConfig): DataFrame =
+    keyedPasses(feats, cfg).map(_._2).reduce(_ unionAll _)
 
   /** Bit-block (pigeonhole) blocking pass for Hamming-close 64-bit hashes
     * (phash / simhash): two hashes within Hamming distance blocks-1 share at

@@ -15,21 +15,21 @@ import org.apache.spark.sql.functions._
   * unlike the reference's counter ids (`ClusterIdGenerators.java:36-59`,
   * SURVEY.md §7.5 risk 1).
   *
-  * Each round ends in `localCheckpoint()` to cut the lineage (a fixpoint
-  * loop would otherwise grow an unbounded plan).
+  * Each round is rebased onto its own execution RDD (`rebaseOnRdd`) and
+  * that RDD is persisted: the rebase cuts the plan (a fixpoint loop would
+  * otherwise grow an unbounded plan) and adds no job of its own.
   */
 object ConnectedComponents {
 
   /** @param edges DataFrame with two columns (src, dst) of one orderable
     *              type (long or string). Self-loops ignored.
-    * @return DataFrame (id, cluster_id) for every node incident to an edge;
-    *         callers union isolated records back as singletons.
-    */
-  /** @param minIter rounds to run before paying for convergence checks.
+    * @param minIter rounds to run before paying for convergence checks.
     *        The signature agg is one cheap job; computing it from round 1
     *        lets dense dedup graphs (near-cliques collapse to a star in one
     *        alternating round) exit after 2 rounds instead of paying an
     *        extra ~6-shuffle round to discover convergence later
+    * @return DataFrame (id, cluster_id) for every node incident to an edge;
+    *         callers union isolated records back as singletons.
     */
   def run(edges: DataFrame, maxIter: Int = 30, minIter: Int = 1): DataFrame = {
     val spark = edges.sparkSession
@@ -133,8 +133,6 @@ object ConnectedComponents {
       eRdd = smallRdd
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] rounds=$iter converged=$converged")
 
     // The final round's RDD must stay persisted until the CALLER materializes
     // the assignment (the result below is lazy), so it can't be released

@@ -1,9 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -359,35 +362,26 @@ object SigKernels {
     new GenericArrayData(set.toArray(new Array[AnyRef](set.size())))
   }
 
-  /** Canonical (min, max) id pairs from one blocking bucket's long-id
-    * list: all index pairs i < j with distinct values — the native form of
-    * the interpreted `flatten(transform(...slice...))` HOF chain in
-    * Blocking's pair expansion (HOFs evaluate interpreted and box every
-    * struct; at millions of within-bucket pairs the eval cost dominates
-    * the blocking stage). One flat long array [id1,id2,id1,id2,...] per
-    * bucket, decoded by the expression into array<struct<id1,id2>>.
+  /** Canonical (min, max) id pairs of one blocking bucket, streamed: one
+    * pair per index pair i < j whose ids are both non-null and distinct,
+    * ordered by `ord` — the element type's interpreted ordering, the one
+    * Spark's `least`/`greatest` use (numeric for bigint, UTF-8 byte order
+    * for string). Lazy: a bucket of n ids holds its n ids, never its
+    * C(n,2) pairs, so an uncapped bucket needs no per-bucket pair buffer.
+    * A null bucket yields no pairs.
     */
-  def pairLongIds(a: ArrayData): ArrayData = {
-    val n = a.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    val ids = a.toLongArray()
-    val out = new java.util.ArrayList[AnyRef](n * (n - 1) / 2)
-    var i = 0
-    while (i < n - 1) {
-      var j = i + 1
-      while (j < n) {
-        val x = ids(i); val y = ids(j)
-        if (x != y) {
-          val r = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-          r.update(0, java.lang.Long.valueOf(math.min(x, y)))
-          r.update(1, java.lang.Long.valueOf(math.max(x, y)))
-          out.add(r)
-        }
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
+  def bucketPairs(a: ArrayData, idType: DataType, ord: Ordering[Any]): Iterator[InternalRow] = {
+    if (a == null) return Iterator.empty
+    val ids = a.toObjectArray(idType).filter(_ != null)
+    val n = ids.length
+    for {
+      i <- Iterator.range(0, n)
+      j <- Iterator.range(i + 1, n)
+      c = ord.compare(ids(i), ids(j))
+      if c != 0
+    } yield
+      if (c < 0) new GenericInternalRow(Array[Any](ids(i), ids(j)))
+      else new GenericInternalRow(Array[Any](ids(j), ids(i)))
   }
 
   /** Comma-joined decimal rendering of an array<bigint> — the digest
@@ -766,26 +760,42 @@ case class WinnowFphs(child: Expression, k: Int, w: Int) extends UnaryExpression
     copy(child = newChild)
 }
 
-/** Canonical within-bucket id pairs for array<bigint> buckets — codegen'd
-  * pair expansion; see [[SigKernels.pairLongIds]].
+/** Within-bucket pair expansion for blocking: a generator emitting
+  * (id1, id2) rows from an array<bigint> or array<string> bucket — see
+  * [[SigKernels.bucketPairs]]. Codegen'd: whole-stage codegen iterates the
+  * kernel's pair stream directly (Catalyst evaluates the equivalent
+  * `transform`/`slice` higher-order-function chain interpreted).
   */
-case class PairLongIds(child: Expression) extends UnaryExpression {
+case class BucketPairs(child: Expression) extends UnaryExpression with Generator {
+
+  private def idType: DataType = child.dataType.asInstanceOf[ArrayType].elementType
+
+  @transient private lazy val ordering = PhysicalDataType.ordering(idType)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType | StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"pair_long_ids requires array<bigint>, got ${t.simpleString}")
+      s"bucket_pairs requires array<bigint> or array<string>, got ${t.simpleString}")
   }
 
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("id1", LongType, nullable = false),
-      StructField("id2", LongType, nullable = false))), containsNull = false)
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("id1", idType, nullable = false),
+    StructField("id2", idType, nullable = false)))
 
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.pairLongIds(input.asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    SigKernels.bucketPairs(child.eval(input).asInstanceOf[ArrayData], idType, ordering)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SigKernels.pairLongIds($c)")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ids = child.genCode(ctx)
+    val typeRef = ctx.addReferenceObj("idType", idType)
+    val ordRef = ctx.addReferenceObj("idOrdering", ordering, "scala.math.Ordering")
+    ev.copy(code = code"""
+      |${ids.code}
+      |scala.collection.Iterator<InternalRow> ${ev.value} =
+      |  graft.functions.SigKernels.bucketPairs(
+      |    ${ids.isNull} ? null : ${ids.value}, $typeRef, $ordRef);
+      |""".stripMargin, isNull = FalseLiteral)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -843,6 +853,6 @@ object SigExprs {
     column(WinnowFphs(expression(c), k, w))
   def joinLongsCsv(c: Column): Column =
     column(JoinLongsCsv(expression(c)))
-  def pairLongIds(c: Column): Column =
-    column(PairLongIds(expression(c)))
+  def bucketPairs(c: Column): Column =
+    column(BucketPairs(expression(c)))
 }

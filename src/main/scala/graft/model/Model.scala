@@ -111,8 +111,8 @@ final case class DedupConfig(
     // evidence, and hold for the synthetic generator's duplicate mix. If
     // hammingThreshold or the block geometry changes — or the corpus
     // clusters its near-dups in that band — RETUNE blocks against a fresh
-    // measured-recall run (tools/PassStats) rather than trusting this
-    // comment.
+    // measured-recall run (the traced benchmark run's block.pairs.* and
+    // block.dup_yield.* per pass) rather than trusting this comment.
     phashBlocks: Int = 2,
     jaccardThreshold: Double = 0.8,
     hammingThreshold: Int = 8,

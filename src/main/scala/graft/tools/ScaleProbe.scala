@@ -8,7 +8,6 @@ import graft.app.Pipeline
 import graft.block.Blocking
 import graft.gen.ImageGen
 import graft.model.DedupConfig
-import graft.sig.Signatures
 
 /** Order-of-magnitude scale probe (round-3 verdict task 8): run the flagship
   * pipeline ONCE at n well beyond the bench point (default 4M rows, ~20 GB of
@@ -69,19 +68,13 @@ object ScaleProbe {
     val feats = Pipeline.features(images.toDF(), cfg)
       .persist(StorageLevel.MEMORY_AND_DISK)
     feats.count()
-    def pass(keyed: org.apache.spark.sql.DataFrame): (Long, Long, Long, Long, Long) = {
+    val passJsons = Blocking.keyedPasses(feats, cfg).map { case (name, keyed) =>
       val st = Blocking.bucketStats(keyed, cfg.maxBucketSize).head()
       val pairs = Blocking.pairsFromKeys(keyed, Some(cfg.maxBucketSize)).count()
-      (pairs, st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3))
+      s""""$name":{"pairs":$pairs,"buckets":${st.getLong(0)},""" +
+        s""""buckets_dropped":${st.getLong(1)},"pairs_dropped":${st.getLong(2)},""" +
+        s""""max_bucket":${st.getLong(3)}}"""
     }
-    val sig = Signatures.minHashFromIntHashesCol(col("shs"), cfg)
-    val lsh = pass(feats.select(col("id"),
-      explode(Signatures.bandHashKeysCol(sig, cfg.bands)).as("key")))
-    val sim = pass(feats.select(col("id"),
-      explode(Blocking.packedBitBlockKeys(col("simhash"),
-        cfg.simhashBits / cfg.simhashBandBits, cfg.simhashBits, 1L)).as("key")))
-    val ph = pass(feats.select(col("id"),
-      explode(Blocking.packedBitBlockKeys(col("phash"), cfg.phashBlocks, 64, 2L)).as("key")))
     // substring pass: the probe-key cardinality is the driver-collect bound
     val shortLen = cfg.shingleK + 3
     val nProbeKeys = feats
@@ -90,14 +83,11 @@ object ScaleProbe {
       Some(cfg.maxBucketSize)).count()
     val unionPairs = Pipeline.candidates(feats, cfg).count()
 
-    def passJson(t: (Long, Long, Long, Long, Long)): String =
-      s"""{"pairs":${t._1},"buckets":${t._2},"buckets_dropped":${t._3},""" +
-        s""""pairs_dropped":${t._4},"max_bucket":${t._5}}"""
     val json =
       s"""{"n":$n,"cores":$cores,"input_bytes":$bytes,""" +
       s""""pipeline_sec":$wall,"images_per_sec":$thr,"canonicals":$nCanon,""" +
       s""""clusters":$nClusters,"max_cluster":$maxCluster,"singletons":$singletons,""" +
-      s""""lsh":${passJson(lsh)},"simhash":${passJson(sim)},"phash":${passJson(ph)},""" +
+      passJsons.mkString("", ",", ",") +
       s""""substring_probe_keys":$nProbeKeys,"substring_pairs":$subPairs,""" +
       s""""union_pairs":$unionPairs}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "scale_probe.json")

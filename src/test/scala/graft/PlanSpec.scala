@@ -117,6 +117,22 @@ class PlanSpec extends AnyFunSuite {
       "IVF cell assignment")
   }
 
+  test("flagship blocking pairs string ids without a higher-order function") {
+    val images = spark.read.parquet(inputPath)
+    val cfg = DedupConfig()
+    val cands = graft.app.Pipeline.candidates(
+      graft.app.Pipeline.features(images, cfg), cfg)
+    // image_id is a string: the pair expansion must still be the codegen'd
+    // kernel, not the interpreted transform/slice lambda chain
+    val hofs = cands.queryExecution.optimizedPlan.collect {
+      case p => p.expressions.flatMap(_.collect {
+        case f: org.apache.spark.sql.catalyst.expressions.LambdaFunction => f
+        case f: org.apache.spark.sql.catalyst.expressions.ArrayTransform => f
+      })
+    }.flatten
+    assert(hofs.isEmpty, s"candidates must not contain higher-order functions: $hofs")
+  }
+
   test("snmPairsScalable emits exactly the snmPairs pair set (boundaries included)") {
     import spark.implicits._
     // keys with heavy ties + nulls, ids out of order; 4 partitions forces

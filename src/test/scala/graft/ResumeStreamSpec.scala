@@ -75,6 +75,22 @@ class ResumeStreamSpec extends AnyFunSuite {
       "completed stages must not be recomputed on resume")
   }
 
+  test("load refuses a stage whose _SUCCESS marker or metrics sidecar is missing") {
+    import spark.implicits._
+    val work = tmpDir("graft-cp-load")
+    val cp = new Checkpoints(spark, work)
+    cp.stage("t")((0L until 10L).toDF("id"))
+    assert(cp.load("t").count() == 10L)
+    // a crash after the data files but before the marker: a partial table
+    Files.delete(Paths.get(s"$work/t/_SUCCESS"))
+    assertThrows[IllegalArgumentException](cp.load("t"))
+    // re-running the stage completes it; then a lost sidecar also refuses
+    cp.stage("t")((0L until 10L).toDF("id"))
+    assert(cp.load("t").count() == 10L)
+    Files.delete(Paths.get(s"$work/t_metrics.json"))
+    assertThrows[IllegalArgumentException](cp.load("t"))
+  }
+
   test("incremental clustering keeps emitted cluster ids stable and merges on new evidence") {
     import spark.implicits._
     val nodes = (0L until 10L).toDF("id")

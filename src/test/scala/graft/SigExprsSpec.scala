@@ -217,29 +217,47 @@ class SigExprsSpec extends AnyFunSuite {
     }
   }
 
-  test("pairLongIds: equals the HOF pair expansion on random buckets (incl. dup ids)") {
+  test("bucketPairs: equals the HOF pair expansion on long and string buckets") {
     val s2 = spark
     import s2.implicits._
+    // the reference: the interpreted least/greatest HOF chain plus the
+    // equal-id post-filter, the expansion the kernel replaced
+    def viaKernelAndHof(in: org.apache.spark.sql.DataFrame)
+        : (Seq[(Any, Any)], Seq[(Any, Any)]) = {
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.get(0), r.get(1))).toSeq
+      val kernel = rows(in.select(graft.functions.SigExprs.bucketPairs(col("ids"))))
+      val ids = col("ids")
+      val hof = flatten(transform(ids, (x, i) =>
+        transform(slice(ids, i + lit(2), greatest(size(ids) - i - 1, lit(0))), y =>
+          struct(least(x, y).as("id1"), greatest(x, y).as("id2")))))
+      val reference = rows(in.select(explode(hof).as("p"))
+        .select(col("p.id1"), col("p.id2"))
+        .where(col("id1") =!= col("id2")))
+      (kernel, reference)
+    }
     val rnd = new scala.util.Random(11)
-    val bucketRows: Seq[Seq[Long]] = Seq(
+    val longBuckets: Seq[Seq[Long]] = Seq(
       Seq.empty[Long], Seq(7L), Seq(3L, 9L), Seq(9L, 3L), Seq(5L, 5L),
       Seq(4L, 4L, 2L)) ++
       (0 until 30).map(_ => Seq.fill(2 + rnd.nextInt(12))(rnd.nextInt(8).toLong))
-    val in = bucketRows.toDF("ids")
-    val native = in
-      .select(explode(graft.functions.SigExprs.pairLongIds(col("ids"))).as("p"))
-      .select(col("p.id1"), col("p.id2"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val ids = col("ids")
-    val hof = flatten(transform(ids, (x, i) =>
-      transform(slice(ids, i + lit(2), greatest(size(ids) - i - 1, lit(0))), y =>
-        struct(least(x, y).as("id1"), greatest(x, y).as("id2")))))
-    val viaHof = in.select(explode(hof).as("p"))
-      .select(col("p.id1"), col("p.id2"))
-      .where(col("id1") =!= col("id2"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(native == viaHof,
-      s"native pair kernel diverges from HOF expansion: $native vs $viaHof")
+    // "｡" (U+FF61) sorts after "😀" (U+1F600) in UTF-16 but before it in
+    // UTF-8 bytes (EF BD A1 < F0 9F 98 80): the kernel must follow Spark's
+    // byte order, as least/greatest do
+    val alphabet = Seq("a", "b", "ab", "", "｡", "😀")
+    val stringBuckets: Seq[Seq[String]] = Seq(
+      Seq.empty[String], Seq("x"), Seq("b", "a"), Seq("a", "a"),
+      Seq("a", "b", "a"), Seq("｡", "😀"), Seq("😀", "｡", "😀")) ++
+      (0 until 30).map(_ => Seq.fill(2 + rnd.nextInt(10))(alphabet(rnd.nextInt(alphabet.size))))
+    for (in <- Seq(longBuckets.toDF("ids"), stringBuckets.toDF("ids"))) {
+      val (kernel, reference) = viaKernelAndHof(in)
+      assert(kernel.sortBy(_.toString) == reference.sortBy(_.toString),
+        s"pair kernel diverges from the HOF expansion: $kernel vs $reference")
+    }
+    val emoji = Seq(Seq("😀", "｡")).toDF("ids")
+      .select(graft.functions.SigExprs.bucketPairs(col("ids")))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(emoji == Seq(("｡", "😀")), s"ids must order by UTF-8 bytes: $emoji")
   }
 
   test("bandHashKeys: deterministic, band-positional, 58-bit masked (namespace-safe)") {
