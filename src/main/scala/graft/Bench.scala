@@ -1,53 +1,61 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.sys.process.{Process, ProcessLogger}
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
 
 import graft.app.Pipeline
 import graft.gen.ImageGen
 import graft.model.DedupConfig
+import graft.tools.Probe
 
 /** Benchmark main. Prints ONE JSON line:
   *  - per-query wall times on the driver's sf tables at SPARK_GRAFT_CPUS
-  *  - flagship image-dedup pipeline throughput at two parallelism levels
+  *  - flagship image-dedup pipeline throughput at [[Lo]] and [[Hi]] cores
   *    on the identical deterministic input — the sandbox evidence protocol
   *    for the north_rule's N->4N scaling criterion (BASELINE.md):
   *    efficiency = (thr@4N / thr@N) / 4.
   *
-  * Scaling-measurement protocol (why it is shaped this way):
-  *  - each scaling run executes in a FRESH subprocess JVM. Running the
-  *    levels inside the query-phase JVM couples them to its GC debt (a
-  *    ~490 s query phase leaves an old gen that penalizes high-thread runs
-  *    disproportionately — observed as a 16-core run 4.6x slower in-JVM
-  *    than standalone);
-  *  - trials are interleaved across levels and the per-level minimum is
-  *    taken: the host is a shared microVM with bursty multi-second stalls,
-  *    so consecutive runs of one level can land inside one bad window;
-  *  - each subprocess is pinned to a real cpuset (taskset +
-  *    ActiveProcessorCount) so a low level cannot borrow host cores for
-  *    GC/netty/JIT (round-2 verdict), and low-level trials run with
-  *    spinner BALLAST on the rest of the high level's cpuset so the HOST
-  *    grants the same physical silicon per busy vCPU at both levels
-  *    (see [[withBallast]] — the host packs 8 busy vCPUs onto shared
-  *    hyperthreads but gives 2 busy vCPUs whole turbo cores, which
-  *    otherwise inflates the low level by the host's boost, not the
-  *    engine's scaling);
-  *  - scan-split sizing is derived from the actual input byte size, never
-  *    hard-wired to one input.
+  * Scaling protocol (fixed; BASELINE.md records the measurements behind
+  * each choice):
+  *  - levels 1 and 4. This VM has ONE shared DRAM bus: streaming reads
+  *    scale linearly from 1 to 4 threads and saturate between 4 and 8, so
+  *    a wider ratio measures the bus, not the engine. The hw envelope
+  *    probe reports bandwidth and register-only compute once per level;
+  *  - each trial is a fresh JVM (no GC debt from the query phase), pinned
+  *    with taskset + ActiveProcessorCount: `local[N]` bounds task slots,
+  *    not the GC/JIT/netty threads, so an unpinned low level borrows cores;
+  *  - low-level trials carry spinner ballast (see [[withBallast]]);
+  *  - [[schedule]] picks every next trial and decides when to stop;
+  *  - the JSON is rewritten after every query and trial, so a kill at any
+  *    point leaves a parseable best-so-far artifact.
+  *
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_OUT, SPARK_GRAFT_CPUS,
+  * SPARK_GRAFT_BENCH_N, SPARK_GRAFT_BENCH_TRIALS (per-level trial cap) and
+  * SPARK_GRAFT_ONLY (comma-separated catalog subset).
   */
 object Bench {
 
-  /** JDK17 module opens Spark needs when launched outside spark-submit
-    * (mirrors build.sbt / JavaModuleOptions.defaultModuleOptions()).
-    */
-  private val addOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  val Lo = 1
+  val Hi = 4
+  /** Wall-clock budget of the whole bench: query phase plus scaling. */
+  val DeadlineSec = 2700L
+  /** Subprocess watchdog: a trial that outlives it is dropped. */
+  val RunTimeoutSec = 1800L
+  /** A level's minimum is confirmed by two trials within this factor of it. */
+  val ConfirmTol = 1.15
+
+  private val taskset = "/usr/bin/taskset"
+  /** Pinning and ballast are on whenever taskset exists. */
+  val pinned: Boolean = new java.io.File(taskset).exists()
 
   private[graft] def dirBytes(path: String): Long = {
     val fs = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
@@ -75,11 +83,7 @@ object Bench {
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")
       .config("spark.local.dir", localDir)
-      // partitions per core: >1 shrinks per-task shuffle hash tables (cache
-      // locality of the build side) at the cost of task overhead — override
-      // to tune; measured on this host in BASELINE.md
-      .config("spark.sql.shuffle.partitions",
-        (cores * sys.env.getOrElse("SPARK_GRAFT_PARTS_PER_CORE", "1").toInt).toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", s"${splitMb}m")
       .config("spark.sql.files.openCostInBytes", "262144")
@@ -105,33 +109,15 @@ object Bench {
     walk(new java.io.File(path))
   }
 
-  private def time[A](f: => A): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Process CPU time (all threads), seconds — for CPU-based efficiency
-    * reporting next to wall clock.
-    */
-  private def processCpuSec(): Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime / 1e9
-      case _ => -1.0
-    }
-
   /** Materialize the deterministic input once as parquet (untimed) — the
     * timed run then measures the ENGINE on a columnar source scan, as in
     * production, not the image encoder.
     */
-  def ensureInput(spark: SparkSession, n: Long): String = {
-    val path = s"/tmp/graft_bench_input_$n"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  def ensureInput(spark: SparkSession, n: Long): String =
+    Probe.cached(s"/tmp/graft_bench_input_$n") { path =>
       ImageGen.asImages(ImageGen.generate(spark, n, 42L, 32))
         .write.mode("overwrite").parquet(path)
     }
-    path
-  }
 
   def pipelineRun(spark: SparkSession, path: String): Long = {
     import spark.implicits._
@@ -142,318 +128,208 @@ object Bench {
     c
   }
 
-  private def gcSec(): Double = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime).sum / 1e3
-  }
+  /** Wall, process CPU and GC-pause seconds of one timed pipeline pass. */
+  final case class Trial(wall: Double, cpu: Double, gc: Double)
 
-  /** One scaling run, in-process: warm at small n (codegen + JIT), then
-    * timed at benchN. Used by the subprocess entry and as fallback.
-    * Returns (wall sec, process CPU sec, GC pause sec) of the timed pass.
+  sealed trait Step
+  final case class RunLevel(cores: Int) extends Step
+  /** Every level is confirmed or has had its capped number of trials. */
+  case object Done extends Step
+  /** The next trial would overrun the deadline. */
+  case object OutOfTime extends Step
+
+  def confirmed(walls: Seq[Double]): Boolean =
+    walls.nonEmpty && walls.count(_ <= walls.min * ConfirmTol) >= 2
+
+  /** The scaling protocol's one rule. `walls` holds each level's surviving
+    * trial times, latest first; `attempts` counts every trial started,
+    * dropped ones included. The next trial goes to an unconfirmed level
+    * below `cap` attempts, the one with fewer attempts first and [[Lo]] on
+    * ties. A level's next trial is estimated at 1.5x its last one; its
+    * first trial only needs the deadline not yet passed.
     */
-  /** Opt-in per-stage profiler (GRAFT_STAGE_PROF=1): accumulates executor
-    * run/CPU time by stage and prints the top stages after the timed pass —
-    * the tool that locates WHERE cpu_work_growth comes from when the two
-    * scaling levels disagree on total CPU.
-    */
-  private final class StageProf extends org.apache.spark.scheduler.SparkListener {
-    val names = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val runMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.LongAdder]()
-    val cpuNs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.LongAdder]()
-    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.LongAdder]()
-    private def adder(m: java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.LongAdder],
-                      k: Int) =
-      m.computeIfAbsent(k, _ => new java.util.concurrent.atomic.LongAdder)
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        adder(runMs, te.stageId).add(m.executorRunTime)
-        adder(cpuNs, te.stageId).add(m.executorCpuTime)
-        adder(tasks, te.stageId).increment()
-      }
+  def schedule(walls: Map[Int, List[Double]], attempts: Map[Int, Int], cap: Int,
+               elapsedSec: Double): Step = {
+    val open = Seq(Lo, Hi).filter { c =>
+      !confirmed(walls.getOrElse(c, Nil)) && attempts.getOrElse(c, 0) < cap
     }
-    override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      names.put(sc.stageInfo.stageId, sc.stageInfo.name.takeWhile(_ != '\n').take(60))
-    def report(): Unit = {
-      import scala.jdk.CollectionConverters._
-      val rows = runMs.keySet.asScala.toSeq.map { id =>
-        (id, names.getOrDefault(id, "?"), runMs.get(id).sum / 1e3,
-          cpuNs.get(id).sum / 1e9, tasks.get(id).sum)
-      }.sortBy(-_._3).take(20)
-      System.err.println(f"[prof] ${"stage"}%-64s ${"run_s"}%8s ${"cpu_s"}%8s tasks")
-      rows.foreach { case (id, nm, run, cpu, t) =>
-        System.err.println(f"[prof] $id%4d $nm%-58s $run%8.1f $cpu%8.1f $t%5d")
-      }
-      val totRun = runMs.values.asScala.map(_.sum).sum / 1e3
-      val totCpu = cpuNs.values.asScala.map(_.sum).sum / 1e9
-      System.err.println(f"[prof] TOTAL run=$totRun%.1f cpu=$totCpu%.1f")
-    }
-  }
-
-  def timedRun(cores: Int, warmPath: String, inputPath: String): (Double, Double, Double) = {
-    val s = session(cores, dirBytes(inputPath))
-    try {
-      pipelineRun(s, warmPath)
-      primeCache(inputPath)
-      val prof = if (sys.env.get("GRAFT_STAGE_PROF").contains("1")) {
-        val p = new StageProf; s.sparkContext.addSparkListener(p); Some(p)
-      } else None
-      val cpu0 = processCpuSec()
-      val gc0 = gcSec()
-      val wall = time(pipelineRun(s, inputPath))
-      val res = (wall, if (cpu0 < 0) -1.0 else processCpuSec() - cpu0, gcSec() - gc0)
-      prof.foreach { p => Thread.sleep(500); p.report() } // listener bus drain
-      res
-    } finally s.stop()
-  }
-
-  /** Spawn one scaling run in a fresh JVM PINNED to a real cpuset; None if
-    * the subprocess fails or exceeds the watchdog timeout (a host-stall
-    * casualty — the trial is dropped rather than poisoning the minimum).
-    *
-    * Pinning protocol (round-2 verdict): `local[N]` bounds TASK SLOTS, not
-    * JVM cores — GC, netty, JIT and parquet compression threads run on any
-    * host core, so an unpinned low level borrows far more than N cores and
-    * the N->4N ratio structurally understates the engine (the round-2
-    * 546/290 s decomposition implied ~205 s of "fixed" overhead that was
-    * really leaked parallelism). `taskset -c 0..N-1` confines the WHOLE
-    * process to N cores and `-XX:ActiveProcessorCount=N` sizes the JVM's
-    * internal pools to match. Returns (wall sec, process CPU sec).
-    */
-  /** Equal-host-load ballast (the hypervisor-layer sibling of the taskset
-    * pin): this sandbox is a microVM on a shared HT host, and the guest
-    * cannot pin HOST cores — the host packs busy vCPUs onto physical
-    * silicon by its own policy. Measured consequence at n=400k: the 2-core
-    * level's threads each get a whole physical core + full turbo while the
-    * 8-core level's threads get packed onto shared hyperthreads
-    * (cpu_work_growth 1.72 — 72% more CPU-seconds at the high level for
-    * identical work, GC flat), so the wall ratio measures the host's
-    * per-thread silicon boost, not the engine. Fix: during a low-level
-    * trial, keep the REST of the high level's cpuset busy with pure
-    * register-arithmetic spinners (no memory traffic), so the host sees
-    * the same number of busy vCPUs at both levels and grants the same
-    * silicon per vCPU. The engine's own cpuset is untouched — spinners run
-    * only on cores [cores, hiCores) which the pinned JVM cannot use.
-    */
-  private def withBallast[T](cores: Int, hiCores: Int)(body: => T): T = {
-    import scala.sys.process._
-    val enabled = cores < hiCores &&
-      !sys.env.get("SPARK_GRAFT_NO_BALLAST").contains("1") &&
-      !sys.env.get("SPARK_GRAFT_NO_PIN").contains("1") &&
-      new java.io.File("/usr/bin/taskset").exists()
-    val procs =
-      if (!enabled) Seq.empty
-      else (cores until hiCores).map { _ =>
-        // hard timeout = the trial watchdog: an orphaned spinner (parent
-        // killed) must never outlive a trial and pollute later measurements
-        val ttl = sys.env.getOrElse("SPARK_GRAFT_RUN_TIMEOUT", "1800")
-        Process(Seq("/usr/bin/timeout", ttl, "/usr/bin/taskset", "-c",
-          s"$cores-${hiCores - 1}", "sh", "-c", "while :; do :; done"))
-          .run(ProcessLogger(_ => ()))
-      }
-    try body finally procs.foreach(p => scala.util.Try(p.destroy()))
-  }
-
-  /** Measure the HARDWARE scaling envelope at `cores` pinned threads (a
-    * fresh taskset-pinned subprocess, like the trials): aggregate
-    * streaming-read bandwidth and per-thread register-only compute time.
-    * Reported next to the engine numbers so the protocol is
-    * self-evidencing: if the hardware itself cannot deliver 4x bandwidth
-    * at 4x cores, no engine measurement on top of it can reach 1.0.
-    */
-  private def hwProbe(cores: Int): Option[(Double, Double)] = {
-    import scala.sys.process._
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val pin =
-      if (sys.env.get("SPARK_GRAFT_NO_PIN").contains("1")) Seq.empty
-      else if (new java.io.File("/usr/bin/taskset").exists())
-        Seq("/usr/bin/taskset", "-c", s"0-${cores - 1}")
-      else Seq.empty
-    val cmd = pin ++ Seq(javaBin, "-Xmx8g", s"-XX:ActiveProcessorCount=$cores",
-      "-cp", cp, "graft.HwProbe", cores.toString)
-    val out = new StringBuilder
-    val logger = ProcessLogger(l => out.synchronized { out.append(l).append('\n') }, _ => ())
-    val rc = scala.util.Try(Process(cmd).run(logger).exitValue()).getOrElse(-1)
-    if (rc != 0) None
+    if (open.isEmpty) Done
     else {
-      val text = out.synchronized(out.toString)
-      def metric(name: String): Option[Double] =
-        (name + "=([0-9.eE+-]+)").r.findFirstMatchIn(text).map(_.group(1).toDouble)
-      for (bw <- metric("GRAFT_HW_STREAM_GBPS"); sp <- metric("GRAFT_HW_SPIN_THREAD_SEC"))
+      val c = open.minBy(attempts.getOrElse(_, 0))
+      val estSec = walls.getOrElse(c, Nil).headOption.fold(0.0)(_ * 1.5)
+      if (elapsedSec + estSec < DeadlineSec) RunLevel(c) else OutOfTime
+    }
+  }
+
+  /** Everything one bench run has measured so far; [[buildJson]] renders
+    * it at any point, unmeasured numbers reading -1.
+    */
+  final class State(sfDir: String, benchN: Long, cap: Int, elapsedSec: () => Long) {
+    val results = mutable.ArrayBuffer.empty[(String, Double)]
+    val errors = mutable.ArrayBuffer.empty[String]
+    val trials = mutable.Map.empty[Int, List[Trial]].withDefaultValue(Nil)
+    val attempts = mutable.Map.empty[Int, Int].withDefaultValue(0)
+    /** hw envelope per level: (stream GB/s, spin seconds per thread). */
+    var hw = Map.empty[Int, (Double, Double)]
+    var deadlineHit = false
+
+    /** Time each query in order. A query that throws reads -1 and is listed
+      * in `errors`, so a regression can't masquerade as a speedup; once the
+      * deadline has passed the rest are not run and read -1 too, but stay
+      * out of `errors`. `after` runs after each query.
+      */
+    def runQueries(queries: Seq[(String, () => Unit)])(after: => Unit): Unit =
+      queries.foreach { case (name, run) =>
+        val sec =
+          if (elapsedSec() >= DeadlineSec) { deadlineHit = true; -1.0 }
+          else try Probe.timed(run())._2 catch { case e: Throwable =>
+            errors += name
+            System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+            -1.0
+          }
+        results += name -> sec
+        after
+      }
+
+    def next(): Step = {
+      val step = schedule(trials.map { case (c, ts) => c -> ts.map(_.wall) }.toMap,
+        attempts.toMap, cap, elapsedSec().toDouble)
+      if (step == OutOfTime) deadlineHit = true
+      step
+    }
+
+    def record(cores: Int, trial: Option[Trial]): Unit = {
+      attempts(cores) += 1
+      trial.foreach(t => trials(cores) = t :: trials(cores))
+    }
+
+    def buildJson(status: String): String = {
+      def best(c: Int)(f: Trial => Double): Double =
+        trials(c).minByOption(_.wall).fold(-1.0)(f)
+      def both(key: String)(f: Int => Any) = Seq(s"${key}_n" -> f(Lo), s"${key}_4n" -> f(Hi))
+      def thr(c: Int) = best(c)(benchN / _.wall)
+      def hwRatio(f: ((Double, Double), (Double, Double)) => Double) =
+        (for (l <- hw.get(Lo); h <- hw.get(Hi)) yield f(l, h)).getOrElse(-1.0)
+      Probe.json(ListMap(Seq(
+        "metric" -> "total", "value" -> results.map(_._2).filter(_ >= 0).sum, "unit" -> "sec",
+        "queries" -> ListMap(results.toSeq: _*), "errors" -> errors.toSeq, "sf" -> sfDir,
+        "status" -> status, "deadline_hit" -> deadlineHit, "deadline_sec" -> DeadlineSec,
+        "elapsed_sec" -> elapsedSec(), "pipeline_n" -> benchN) ++
+        both("cores")(identity) ++
+        both("images_per_sec")(thr) ++
+        both("pipeline_sec")(c => best(c)(_.wall)) ++
+        both("cpu_sec")(c => best(c)(_.cpu)) ++
+        both("gc_sec")(c => best(c)(_.gc)) ++
+        both("cpu_util")(c => best(c)(t => if (t.cpu <= 0) -1.0 else t.cpu / (t.wall * c))) ++
+        Seq("cpu_work_growth" -> (if (best(Lo)(_.cpu) <= 0 || best(Hi)(_.cpu) <= 0) -1.0
+          else best(Hi)(_.cpu) / best(Lo)(_.cpu))) ++
+        both("trials")(trials(_).size) ++
+        both("min_confirmed")(c => confirmed(trials(c).map(_.wall))) ++
+        Seq("pinned" -> pinned, "ballast" -> pinned) ++
+        both("hw_stream_gbps")(hw.get(_).fold(-1.0)(_._1)) ++
+        both("hw_spin_sec")(hw.get(_).fold(-1.0)(_._2)) ++
+        Seq(
+          "hw_bw_scaling" -> hwRatio((l, h) => (h._1 / l._1) / (Hi.toDouble / Lo)),
+          "hw_compute_scaling" -> hwRatio((l, h) => l._2 / h._2),
+          "scaling_efficiency" -> (if (thr(Lo) > 0 && thr(Hi) > 0)
+            (thr(Hi) / thr(Lo)) / (Hi.toDouble / Lo) else -1.0)): _*))
+    }
+  }
+
+  private val KeyValue = "([A-Z_]+)=([0-9.eE+-]+)".r
+
+  /** Run `main` in a fresh JVM pinned to cores [0, cores) and return the
+    * `KEY=number` lines it printed, or None if it failed or outlived the
+    * watchdog. The JVM starts with this JVM's own arguments, which carry
+    * build.sbt's --add-opens list, -D confs and RAM-derived -Xmx.
+    */
+  private def launch(cores: Int, main: String, args: String*): Option[Map[String, Double]] = {
+    val pin = if (pinned) Seq(taskset, "-c", s"0-${cores - 1}") else Nil
+    // G1 explicitly: at ActiveProcessorCount=1 JVM ergonomics fall back to
+    // SerialGC, whose single-threaded full STW compactions cost ~27% of the
+    // 1-core wall time (measured 197 s GC in a 728 s run) — a JVM-selection
+    // artifact, not an engine property; every level runs the same collector
+    val cmd = pin ++ Seq(System.getProperty("java.home") + "/bin/java") ++
+      ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
+      Seq("-XX:+UseG1GC", s"-XX:ActiveProcessorCount=$cores",
+        "-cp", System.getProperty("java.class.path"), main) ++ args
+    val out = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    val p = Process(cmd).run(ProcessLogger(
+      { case KeyValue(k, v) => v.toDoubleOption.foreach(out.put(k, _)); case _ => () },
+      _ => ()))
+    val exit = Future(blocking(p.exitValue()))(ExecutionContext.global)
+    val rc = Try(Await.result(exit, RunTimeoutSec.seconds)).getOrElse { p.destroy(); -1 }
+    if (rc == 0) Some(out.asScala.toMap) else None
+  }
+
+  private def pipelineTrial(cores: Int, warmPath: String, inputPath: String): Option[Trial] =
+    launch(cores, "graft.BenchPipeline", cores.toString, warmPath, inputPath).flatMap { m =>
+      m.get("GRAFT_PIPELINE_SEC").map(Trial(_, m.getOrElse("GRAFT_PIPELINE_CPU_SEC", -1.0),
+        m.getOrElse("GRAFT_PIPELINE_GC_SEC", -1.0)))
+    }
+
+  /** The HARDWARE scaling envelope at `cores` pinned threads (see
+    * [[HwProbe]]): if the silicon cannot deliver 4x bandwidth at 4x cores,
+    * no engine measurement on top of it can reach 1.0.
+    */
+  private def hwProbe(cores: Int): Option[(Double, Double)] =
+    launch(cores, "graft.HwProbe", cores.toString).flatMap { m =>
+      for (bw <- m.get("GRAFT_HW_STREAM_GBPS"); sp <- m.get("GRAFT_HW_SPIN_THREAD_SEC"))
         yield (bw, sp)
     }
-  }
 
-  private def subprocessRun(cores: Int, warmPath: String,
-                            inputPath: String): Option[(Double, Double, Double)] = {
-    import scala.sys.process._
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val mem = sys.env.getOrElse("SPARK_GRAFT_SUB_MEM", "36g")
-    val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_RUN_TIMEOUT", "1800").toLong
-    val pin =
-      if (sys.env.get("SPARK_GRAFT_NO_PIN").contains("1")) Seq.empty
-      else if (new java.io.File("/usr/bin/taskset").exists())
-        Seq("/usr/bin/taskset", "-c", s"0-${cores - 1}")
-      else Seq.empty
-    // G1 explicitly: at ActiveProcessorCount=1 JVM ergonomics fall back to
-    // SerialGC, whose single-threaded full STW compactions of a 36g heap
-    // cost ~27% of the 1-core wall time (measured 197 s GC in a 728 s run)
-    // — a JVM-selection artifact, not an engine property; every level runs
-    // the same collector
-    val cmd = pin ++ Seq(javaBin, s"-Xmx$mem", "-XX:+UseG1GC",
-      s"-XX:ActiveProcessorCount=$cores") ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", cp, "graft.BenchPipeline", cores.toString, warmPath, inputPath)
-    val out = new StringBuilder
-    val logger = ProcessLogger(l => out.synchronized { out.append(l).append('\n') }, _ => ())
-    val p = Process(cmd).run(logger)
-    val done = new java.util.concurrent.CompletableFuture[Int]()
-    new Thread(() => done.complete(p.exitValue()), "graft-bench-wait").start()
-    val rc = try done.get(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-    catch { case _: java.util.concurrent.TimeoutException => p.destroy(); -1 }
-    if (rc != 0) None
-    else {
-      val text = out.synchronized(out.toString)
-      def metric(name: String): Option[Double] =
-        (name + "=([0-9.eE+-]+)").r.findFirstMatchIn(text).map(_.group(1).toDouble)
-      metric("GRAFT_PIPELINE_SEC").map(w =>
-        (w, metric("GRAFT_PIPELINE_CPU_SEC").getOrElse(-1.0),
-          metric("GRAFT_PIPELINE_GC_SEC").getOrElse(-1.0)))
-    }
+  /** Equal-host-load ballast (the hypervisor-layer sibling of the taskset
+    * pin): this sandbox is a microVM on a shared HT host, and the guest
+    * cannot pin HOST cores. Measured at n=400k, a low level's threads each
+    * got a whole physical core + full turbo while the high level's got
+    * packed onto shared hyperthreads (cpu_work_growth 1.72 for identical
+    * work), so the wall ratio measured the host's per-thread boost, not the
+    * engine. During a low-level trial, register-only spinners (no memory
+    * traffic) keep the rest of the high level's cpuset busy, so the host
+    * sees the same number of busy vCPUs at both levels. The pinned JVM
+    * cannot use cores [cores, Hi), so its own cpuset is untouched.
+    */
+  private def withBallast[T](cores: Int)(body: => T): T = {
+    val spinners =
+      if (!pinned) Nil
+      else (cores until Hi).map { _ =>
+        // the watchdog timeout: an orphaned spinner (parent killed) must
+        // never outlive a trial and pollute later measurements
+        Process(Seq("/usr/bin/timeout", RunTimeoutSec.toString, taskset, "-c",
+          s"$cores-${Hi - 1}", "sh", "-c", "while :; do :; done")).run(ProcessLogger(_ => ()))
+      }
+    try body finally spinners.foreach(p => Try(p.destroy()))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     // large enough that parallel compute dominates the measured ~14 s of
     // per-run overhead (plan compile, per-job scheduling, session + scan
-    // setup, GC) even at the highest level: the efficiency target needs
-    // C/cores >> overhead, which small runs cannot provide
+    // setup, GC) even at the highest level
     val benchN = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "400000").toLong
-    val trials = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRIALS", "3").toInt
-
-    // Total wall-clock budget for the WHOLE bench (query phase + scaling
-    // protocol). Two consecutive driver runs were killed mid-protocol
-    // (r3 parsed:null, r4 rc=124) because the JSON was written only at the
-    // very end: the full pre-registered protocol (6 pinned trials at up to
-    // ~500 s each + up to 6 adaptive extras + 900 s of dirty-window waits)
-    // can exceed the driver's timeout on a contended host. The deadline
-    // halts further trials/waits once exceeded and the confirmed-so-far
-    // state is emitted with deadline_hit=true; combined with the
-    // incremental flush below (the artifact is rewritten after EVERY
-    // completed query and trial) a kill at any point leaves a parseable
-    // best-so-far file.
-    val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "2700").toLong
-    val benchT0 = System.nanoTime()
-    def elapsedSec: Long = ((System.nanoTime() - benchT0) / 1e9).toLong
-    def pastDeadline: Boolean = elapsedSec >= deadlineSec
-    var deadlineHit = false
-
-    // ---- all result state, declared up-front so the incremental emitter
-    // can flush a parseable snapshot at any point in the protocol
-    val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val errors = scala.collection.mutable.ArrayBuffer.empty[String]
-    val levels = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORES", "1,4")
-      .split(",").map(_.trim.toInt).toSeq
-    val lo = levels.min; val hi = levels.max
-    val best = scala.collection.mutable.Map.empty[Int, Double]
-    val bestCpu = scala.collection.mutable.Map.empty[Int, Double]
-    val bestGc = scala.collection.mutable.Map.empty[Int, Double]
-    val survived = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
-    val allTimes = scala.collection.mutable.Map.empty[Int, List[Double]].withDefaultValue(Nil)
-    var dirtySkips = 0
-    var fellBack: Seq[Int] = Seq.empty
-    var hw: Map[Int, Option[(Double, Double)]] = Map(lo -> None, hi -> None)
-    def stable(c: Int): Boolean =
-      best.contains(c) && allTimes(c).count(_ <= best(c) * 1.15) >= 2
+    val cap = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRIALS", "3").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    val t0 = System.nanoTime()
+    val state = new State(sfDir, benchN, cap, () => ((System.nanoTime() - t0) / 1e9).toLong)
+    def flush(status: String): Unit = Probe.write(outPath, state.buildJson(status))
 
-    /** Build the result JSON from the CURRENT state (missing scaling levels
-      * read as -1 with min_confirmed=false) and atomically rewrite the
-      * artifact file. Called after every completed query and every scaling
-      * trial: the on-disk file is always the parseable best-so-far state,
-      * so a driver-side kill at any point loses at most one in-flight
-      * measurement, never the whole run.
-      */
-    def buildJson(status: String): String = {
-      def b(c: Int, m: scala.collection.Map[Int, Double]): Double = m.getOrElse(c, -1.0)
-      val thrLo = if (best.contains(lo)) benchN / best(lo) else -1.0
-      val thrHi = if (best.contains(hi)) benchN / best(hi) else -1.0
-      val eff = if (thrLo > 0 && thrHi > 0) (thrHi / thrLo) / (hi.toDouble / lo) else -1.0
-      def util(c: Int) =
-        if (b(c, bestCpu) <= 0 || !best.contains(c)) -1.0 else bestCpu(c) / (best(c) * c)
-      val workGrowth =
-        if (b(lo, bestCpu) <= 0 || b(hi, bestCpu) <= 0) -1.0 else bestCpu(hi) / bestCpu(lo)
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val total = results.map(_._2).filter(_ >= 0).sum
-      val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir",""" +
-      s""""status":"$status","deadline_hit":$deadlineHit,"deadline_sec":$deadlineSec,"elapsed_sec":$elapsedSec,""" +
-      s""""pipeline_n":$benchN,"cores_n":$lo,"cores_4n":$hi,""" +
-      s""""images_per_sec_n":${thrLo},"images_per_sec_4n":${thrHi},""" +
-      s""""pipeline_sec_n":${b(lo, best)},"pipeline_sec_4n":${b(hi, best)},""" +
-      s""""cpu_sec_n":${b(lo, bestCpu)},"cpu_sec_4n":${b(hi, bestCpu)},""" +
-      s""""gc_sec_n":${b(lo, bestGc)},"gc_sec_4n":${b(hi, bestGc)},""" +
-      s""""cpu_util_n":${util(lo)},"cpu_util_4n":${util(hi)},""" +
-      s""""cpu_work_growth":$workGrowth,""" +
-      s""""trials_n":${survived(lo)},"trials_4n":${survived(hi)},""" +
-      s""""min_confirmed_n":${stable(lo)},"min_confirmed_4n":${stable(hi)},""" +
-      s""""dirty_windows_skipped":$dirtySkips,""" +
-      s""""fallback_levels":${fellBack.mkString("[", ",", "]")},""" +
-      s""""pinned":${!sys.env.get("SPARK_GRAFT_NO_PIN").contains("1")},""" +
-      s""""ballast":${!sys.env.get("SPARK_GRAFT_NO_BALLAST").contains("1") &&
-        !sys.env.get("SPARK_GRAFT_NO_PIN").contains("1")},""" +
-      s""""hw_stream_gbps_n":${hw(lo).map(_._1).getOrElse(-1.0)},""" +
-      s""""hw_stream_gbps_4n":${hw(hi).map(_._1).getOrElse(-1.0)},""" +
-      s""""hw_spin_sec_n":${hw(lo).map(_._2).getOrElse(-1.0)},""" +
-      s""""hw_spin_sec_4n":${hw(hi).map(_._2).getOrElse(-1.0)},""" +
-      s""""hw_bw_scaling":${(for (l <- hw(lo); h <- hw(hi))
-        yield (h._1 / l._1) / (hi.toDouble / lo)).getOrElse(-1.0)},""" +
-      s""""hw_compute_scaling":${(for (l <- hw(lo); h <- hw(hi))
-        yield l._2 / h._2).getOrElse(-1.0)},""" +
-      s""""scaling_efficiency":$eff}"""
-    }
-    def flush(status: String): Unit = {
-      val json = buildJson(status)
-      try {
-        val tmp = java.nio.file.Paths.get(outPath + ".tmp")
-        java.nio.file.Files.write(tmp,
-          (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, java.nio.file.Paths.get(outPath),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } catch { case e: Exception =>
-        System.err.println(s"[bench] could not write $outPath: $e") }
-    }
-
-    // ---- per-query timings on the sf tables; a query that throws is
-    // recorded as -1 (NOT folded into total as a fast success) and listed
-    // in "errors" so a regression can't masquerade as a speedup
     val spark = session(cpus, dirBytes(sfDir))
-    // SPARK_GRAFT_ONLY=q1,q2 restricts the per-query phase (regression
-    // triage tool; the driver's full run leaves it unset). Unknown names
-    // fail fast: a typo would otherwise run ZERO queries and emit a
-    // near-0s total with empty errors — a fake instant pass in a file
-    // whose design goal is that regressions can't masquerade as speedups.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    // Unknown names fail fast: a typo would otherwise run ZERO queries and
+    // emit a near-0s total with empty errors — a fake instant pass.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     only.foreach { names =>
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty,
         s"SPARK_GRAFT_ONLY names not in the catalog: ${unknown.toSeq.sorted.mkString(",")}")
     }
     // Untimed session warmup. First-action costs — JIT of Spark's scan +
-    // codegen + shuffle stack, parquet footer reads, Janino warm-up —
-    // previously landed entirely on the alphabetically-first catalog query
-    // (measured: ann_ivf 2.9-6.5 s cold vs 0.6-0.7 s warm at the same SF),
-    // so the per-query table ranked queries by name order, not cost. Warm
-    // with base-table counts plus the one catalog query that shares no
-    // memoized stage with anything (q1_agg, a plain lineitem aggregate):
-    // every timed query still pays its own plan compile, codegen and stage
-    // compute — only the one-time session costs move out of the numbers.
+    // codegen + shuffle stack, parquet footer reads, Janino warm-up — would
+    // otherwise land on the alphabetically-first catalog query (measured:
+    // ann_ivf 2.9-6.5 s cold vs 0.6-0.7 s warm). q1_agg shares no memoized
+    // stage with any other query, so every timed query still pays its own
+    // plan compile, codegen and stage compute.
     locally {
       import scala.util.control.NonFatal
       Seq("lineitem", "documents", "embeddings", "customer").foreach { t =>
@@ -463,180 +339,62 @@ object Bench {
       try SparkEntry.queries("q1_agg")(spark, sfDir).count()
       catch { case NonFatal(_) => () }
     }
-
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    state.runQueries(SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      var failed = false
-      val t = time {
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable =>
-          failed = true
-          errors += name
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        }
-      }
-      results += (name -> (if (failed) -1.0 else t))
-      flush("queries")
-    }
+      .map { case (name, fn) => name -> (() => { fn(spark, sfDir).count(); () }) })(flush("queries"))
 
-    // ---- scaling inputs, generated once (untimed)
+    // scaling inputs, generated once (untimed)
     val warmPath = ensureInput(spark, 2000L)
     val inputPath = ensureInput(spark, benchN)
     spark.stop()
 
-    // Scaling levels: N=1 vs 4N=4 by default (parsed up-front with the
-    // result state), for two MEASURED hardware reasons (microbenchmarks
-    // below report the envelope into the JSON):
-    //  - memory bandwidth: this VM has ONE shared DRAM bus. Streaming
-    //    reads measure 5.0 GB/s at 1 thread -> 21.2 GB/s at 4 (linear,
-    //    4.2x) but only 26.8 GB/s at 8 (the saturation knee sits between
-    //    4 and 8 threads; 2->8 delivers just 2.3x bandwidth for 4x cores,
-    //    capping ANY memory-touching job at ~0.58 efficiency). A real
-    //    4x-executor cluster brings 4x memory buses — the single shared
-    //    bus is a sandbox artifact of the same class as the single virtio
-    //    disk (removed via tmpfs above), so the levels must stay inside
-    //    the linear-bandwidth regime for the ratio to measure the engine;
-    //  - host scheduling: the shared-host microVM schedules <=8 busy
-    //    vCPUs stably (16-thread runs swing 2-6x), and register-only
-    //    compute scales 0.87-0.95 from 1->4 pinned threads. 1v4 keeps
-    //    both levels reliably schedulable AND below the DRAM knee.
-    // Override via SPARK_GRAFT_BENCH_CORES.
-    // asymmetric sampling: the high level needs `hi` simultaneously free
-    // host cores, so its clean windows are rarer — give it the extra
-    // trials (lo: trials-1, hi: trials+1), interleaved. At trials=1 the
-    // asymmetric schedule would starve `lo` entirely (forcing the invalid
-    // in-process fallback), so the floor is one subprocess trial per level.
-    val order =
-      if (trials <= 1) Seq(lo, hi)
-      else ((0 until trials - 1).flatMap(t => if (t % 2 == 0) Seq(lo, hi) else Seq(hi, lo)) ++
-        Seq(hi, hi)).take(2 * trials)
-
-    // Host-window gating: this is a microVM on a SHARED host whose
-    // contention windows last minutes and inflate even register-only
-    // compute (observed 2.27 -> 4.35 s/thread on the same spin probe an
-    // hour apart). A trial started inside such a window is wasted — worse,
-    // a low-level trial that lands clean while the high level lands dirty
-    // poisons the ratio in a way min-of-N cannot repair if the whole
-    // schedule sits in one bad window. So: probe the envelope (cheap, ~8 s)
-    // immediately before each trial and SKIP while the spin time at that
-    // cpuset exceeds the cleanest spin seen this run by >20%, bounded by
-    // SPARK_GRAFT_BENCH_MAX_WAIT seconds of total waiting.
-    var cleanSpin = Double.MaxValue
-    val maxWaitSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_WAIT", "900").toLong
-    var waitedSec = 0L
-    def windowClean(cores: Int): Boolean = hwProbe(cores) match {
-      case Some((_, sp)) =>
-        cleanSpin = math.min(cleanSpin, sp)
-        sp <= cleanSpin * 1.2
-      case None => true // probe failure says nothing about the window
-    }
-    def awaitCleanWindow(cores: Int): Unit = {
-      var clean = windowClean(cores)
-      while (!clean && waitedSec < maxWaitSec && !pastDeadline) {
-        dirtySkips += 1
-        System.err.println(s"[bench] host window dirty at cores=$cores — waiting 45 s " +
-          s"(${waitedSec}s/${maxWaitSec}s budget)")
-        Thread.sleep(45000)
-        waitedSec += 45
-        clean = windowClean(cores)
-      }
-    }
-    def record(label: String, cores: Int): Unit = {
-      awaitCleanWindow(cores)
-      withBallast(cores, hi) { subprocessRun(cores, warmPath, inputPath) } match {
-        case Some((t, cpu, gc)) =>
-          System.err.println(f"[bench] $label cores=$cores sec=$t%.1f cpu=$cpu%.1f gc=$gc%.1f")
-          survived(cores) += 1
-          allTimes(cores) = t :: allTimes(cores)
-          if (t < best.getOrElse(cores, Double.MaxValue)) {
-            best(cores) = t; bestCpu(cores) = cpu; bestGc(cores) = gc
-          }
-        case None =>
-          System.err.println(s"[bench] $label cores=$cores dropped (failed/timeout)")
-      }
-      flush("scaling")
-    }
-    /** Deadline gate before starting a trial of ~estSec: skip if the
-      * remaining budget can't absorb it (a trial that would straddle the
-      * deadline wastes the budget AND its own measurement when killed).
-      */
-    def budgetFor(cores: Int): Boolean = {
-      // conservative per-trial estimate from observed minima (or the r4
-      // envelope if this level has no data yet)
-      val estSec = best.get(cores).map(_ * 1.5).getOrElse(if (cores == lo) 550.0 else 260.0)
-      val ok = elapsedSec + estSec < deadlineSec
-      if (!ok) {
-        deadlineHit = true
-        System.err.println(s"[bench] deadline: ${elapsedSec}s elapsed + ~${estSec.toLong}s trial " +
-          s"> ${deadlineSec}s budget — halting trials at cores=$cores")
-      }
-      ok
-    }
-    // hardware envelope at each level (untimed, before the trials): what
-    // the silicon itself delivers for memory-bound and compute-bound work
-    // at this cpuset size — the ceiling any engine number must be read
-    // against
-    hw = Seq(lo, hi).map(c => c -> hwProbe(c)).toMap
-    hw.foreach { case (c, v) =>
-      System.err.println(s"[bench] hw cores=$c " +
-        v.map { case (bw, sp) => f"stream=$bw%.1fGB/s spin=$sp%.2fs/thread" }.getOrElse("probe failed"))
+    state.hw = Seq(Lo, Hi).flatMap(c => hwProbe(c).map(c -> _)).toMap
+    Seq(Lo, Hi).foreach { c =>
+      System.err.println(s"[bench] hw cores=$c " + state.hw.get(c)
+        .map { case (bw, sp) => f"stream=$bw%.1fGB/s spin=$sp%.2fs/thread" }.getOrElse("probe failed"))
     }
     flush("scaling")
 
-    order.zipWithIndex.foreach { case (cores, i) =>
-      if (budgetFor(cores)) record(s"run ${i + 1}/${order.size}", cores)
-    }
-    // Adaptive extension: the host is a shared microVM whose contention
-    // windows last many minutes, and guest CPU accounting includes stolen
-    // time (Firecracker does not trap the TSC), so a whole fixed schedule
-    // can land inside one bad window and the per-level minima stay
-    // poisoned. Keep sampling (bounded) until each level's minimum is
-    // CONFIRMED: at least two trials within 15% of the level best — a
-    // reproduced minimum, not one lucky/unlucky window. The deadline gate
-    // halts extension first: confirmed-so-far beats killed-mid-protocol.
-    val maxExtra = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_EXTRA", "6").toInt
-    var extra = 0
-    var halted = false
-    while (extra < maxExtra && !halted && !(stable(lo) && stable(hi))) {
-      val target = if (!stable(lo) && (stable(hi) || extra % 2 == 0)) lo else hi
-      if (budgetFor(target)) record(s"extra ${extra + 1}/$maxExtra", target)
-      else halted = true
-      extra += 1
-    }
-
-    // A level with ZERO surviving subprocess trials falls back in-process —
-    // an invalid measurement mode (driver-JVM GC coupling, no cpuset pin).
-    // The fallback is FLAGGED in the JSON so the consumer can reject the
-    // number instead of mistaking it for a pinned measurement. Skipped
-    // once the deadline is hit: a -1 level with deadline_hit=true is more
-    // honest than an unpinned number started with no budget left.
-    fellBack = Seq(lo, hi).filterNot(best.contains)
-    fellBack.foreach { cores =>
-      if (budgetFor(cores)) {
-        val (w, c, g) = timedRun(cores, warmPath, inputPath)
-        best(cores) = w; bestCpu(cores) = c; bestGc(cores) = g
+    @annotation.tailrec def runTrials(): Unit = state.next() match {
+      case RunLevel(c) =>
+        val t = withBallast(c) { pipelineTrial(c, warmPath, inputPath) }
+        state.record(c, t)
+        System.err.println(s"[bench] trial ${state.attempts(c)} cores=$c " + t.map(t =>
+          f"sec=${t.wall}%.1f cpu=${t.cpu}%.1f gc=${t.gc}%.1f").getOrElse("dropped (failed/timeout)"))
         flush("scaling")
-      }
+        runTrials()
+      case OutOfTime =>
+        System.err.println(s"[bench] deadline: the next trial would overrun ${DeadlineSec}s — halting")
+      case Done => ()
     }
+    runTrials()
 
-    // Final emission: the stable file (rewritten all run long — see flush)
-    // plus the stdout line for consumers that tail logs.
-    flush("final")
-    println(buildJson("final"))
+    Probe.emit(outPath, state.buildJson("final"))
   }
 }
 
-/** Subprocess entry for one scaling run: fresh JVM, fresh heap, one warm
-  * pass, one timed pass. Prints GRAFT_PIPELINE_SEC=<seconds>.
+/** Subprocess entry for one scaling trial: fresh JVM, fresh heap, one warm
+  * pass (codegen + JIT), page cache primed, one timed pass. Prints
+  * GRAFT_PIPELINE_SEC, GRAFT_PIPELINE_CPU_SEC and GRAFT_PIPELINE_GC_SEC.
   */
 object BenchPipeline {
   def main(args: Array[String]): Unit = {
     val Array(cores, warmPath, inputPath) = args
-    val (wall, cpu, gc) = Bench.timedRun(cores.toInt, warmPath, inputPath)
+    val s = Bench.session(cores.toInt, Bench.dirBytes(inputPath))
+    Bench.pipelineRun(s, warmPath)
+    Bench.primeCache(inputPath)
+    def cpuSec: Double = ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime / 1e9
+      case _ => -1.0
+    }
+    def gcSec: Double =
+      ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3
+    val (cpu0, gc0) = (cpuSec, gcSec)
+    val wall = Probe.timed(Bench.pipelineRun(s, inputPath))._2
     println(s"GRAFT_PIPELINE_SEC=$wall")
-    println(s"GRAFT_PIPELINE_CPU_SEC=$cpu")
-    println(s"GRAFT_PIPELINE_GC_SEC=$gc")
+    println(s"GRAFT_PIPELINE_CPU_SEC=${if (cpu0 < 0) -1.0 else cpuSec - cpu0}")
+    println(s"GRAFT_PIPELINE_GC_SEC=${gcSec - gc0}")
+    s.stop()
     sys.exit(0)
   }
 }

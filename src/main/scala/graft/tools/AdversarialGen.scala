@@ -175,7 +175,7 @@ object AdversarialGen {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_adversarial"
-    val spark = graft.Bench.session(8)
+    val spark = graft.Bench.session(Runtime.getRuntime.availableProcessors)
     try writeCorpus(spark, srcDir, outDir) finally spark.stop()
     println(s"ADVERSARIAL_CORPUS=$outDir")
   }

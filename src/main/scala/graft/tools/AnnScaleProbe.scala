@@ -1,11 +1,14 @@
 package graft.tools
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Bench
 import graft.ops.Embeddings
+import graft.tools.Probe.{bestOf, timed}
 
 /** ANN order-of-magnitude scale probe: the catalog's ANN ladder (exact /
   * IVF-PQ trained / SQ8) has only ever been measured at the bench corpus
@@ -24,8 +27,7 @@ import graft.ops.Embeddings
   * pruning faces a realistic cell-size distribution rather than uniform
   * noise, and every run reproduces bit-identically.
   *
-  * Output: one JSON line on stdout AND SPARK_GRAFT_ANN_PROBE_OUT (default
-  * ann_scale_probe.json).
+  * Output: see [[Probe]].
   *
   * Usage: runMain graft.tools.AnnScaleProbe [n] [cores] [nQueries]
   */
@@ -52,7 +54,7 @@ object AnnScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cores = args.lift(1).map(_.toInt).getOrElse(32)
+    val cores = Probe.cores(args, 1)
     val nQ = args.lift(2).map(_.toInt).getOrElse(64)
     val k = 10
     val numCells = 256
@@ -62,10 +64,9 @@ object AnnScaleProbe {
     val shortlist = 100
 
     // ---- materialize the corpus once (untimed)
-    val inputPath = s"/tmp/graft_ann_input_$n"
-    if (!new java.io.File(inputPath, "_SUCCESS").exists()) {
+    val inputPath = Probe.cached(s"/tmp/graft_ann_input_$n") { path =>
       val gen = Bench.session(cores)
-      genVectors(gen, n, 8 * cores).write.mode("overwrite").parquet(inputPath)
+      genVectors(gen, n, 8 * cores).write.mode("overwrite").parquet(path)
       gen.stop()
     }
     val bytes = Bench.dirBytes(inputPath)
@@ -77,18 +78,6 @@ object AnnScaleProbe {
       .persist(StorageLevel.MEMORY_AND_DISK)
     queries.count()
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    // the sandbox host is shared and run-to-run wall swings up to ~10x
-    // under external load (the round-3 bench protocol's finding) — report
-    // the MINIMUM of `trials` runs, the same confirmed-minimum discipline
-    // graft.Bench uses
-    val trials = sys.env.getOrElse("SPARK_GRAFT_PROBE_TRIALS", "2").toInt
-    def bestOf(f: => Unit): Double =
-      (0 until trials).map(_ => timed(f)._2).min
     def mat(df: () => DataFrame): (DataFrame, Double) = {
       var last: DataFrame = null
       val s = bestOf {
@@ -156,27 +145,18 @@ object AnnScaleProbe {
           Seq("query_id", "neighbor_id")).count()
       hits.toDouble / (nQ.toLong * k)
     }
-    val ivfpqRecall = recall(ivfpq)
-    val ivfpqSRecall = recall(ivfpqS)
-    val sqRecall = recall(sq)
 
-    val json =
-      s"""{"n":$n,"dim":$dim,"cores":$cores,"queries":$nQ,"k":$k,""" +
-      s""""input_bytes":$bytes,"pq_code_bytes":$codeBytes,""" +
-      s""""numCells":$numCells,"nprobe":$nprobe,"pq_m":$pqM,"pq_codes":$pqCodes,""" +
-      s""""shortlist":$shortlist,""" +
-      s""""exact_sec":$exactSec,""" +
-      s""""ivf_train_sec":$ivfTrainSec,"pq_train_sec":$pqTrainSec,""" +
-      s""""encode_sec":$encodeSec,"encode_rows_per_sec":${n / encodeSec},""" +
-      s""""ivfpq_search_sec":$ivfpqSec,"ivfpq_recall10":$ivfpqRecall,""" +
-      s""""scaled_shortlist":$scaledShortlist,""" +
-      s""""ivfpq_scaled_search_sec":$ivfpqSSec,"ivfpq_scaled_recall10":$ivfpqSRecall,""" +
-      s""""sq_search_sec":$sqSec,"sq_recall10":$sqRecall}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_ANN_PROBE_OUT", "ann_scale_probe.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception => System.err.println(s"[probe] write failed: $e") }
-    println(json)
+    Probe.emit("ann", ListMap(
+      "n" -> n, "dim" -> dim, "cores" -> cores, "queries" -> nQ, "k" -> k,
+      "input_bytes" -> bytes, "pq_code_bytes" -> codeBytes,
+      "numCells" -> numCells, "nprobe" -> nprobe, "pq_m" -> pqM, "pq_codes" -> pqCodes,
+      "shortlist" -> shortlist, "exact_sec" -> exactSec,
+      "ivf_train_sec" -> ivfTrainSec, "pq_train_sec" -> pqTrainSec,
+      "encode_sec" -> encodeSec, "encode_rows_per_sec" -> n / encodeSec,
+      "ivfpq_search_sec" -> ivfpqSec, "ivfpq_recall10" -> recall(ivfpq),
+      "scaled_shortlist" -> scaledShortlist,
+      "ivfpq_scaled_search_sec" -> ivfpqSSec, "ivfpq_scaled_recall10" -> recall(ivfpqS),
+      "sq_search_sec" -> sqSec, "sq_recall10" -> recall(sq)))
     spark.stop()
   }
 }

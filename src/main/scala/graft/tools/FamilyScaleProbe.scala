@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Bench
+import graft.tools.Probe.timed
 
 /** Round-4-family scale probe (VERDICT r4 task 4): the winnow fingerprint
   * index, the DBSCAN ε-graph (semantic pair stage), CDC chunking, and the
@@ -24,8 +25,7 @@ import graft.Bench
   * quadratic 62k-member buckets by construction; the probe measures the
   * config production would run.
   *
-  * Output: one JSON line on stdout AND SPARK_GRAFT_PROBE_OUT (default
-  * family_scale_probe.json).
+  * Output: see [[Probe]].
   *
   * Usage: runMain graft.tools.FamilyScaleProbe [n1] [n2] [cores]
   */
@@ -111,23 +111,15 @@ object FamilyScaleProbe {
   private def ensureCorpus(spark: SparkSession, n: Long, dim: Int): String = {
     val dir = s"/tmp/graft_family_probe_$n"
     import spark.implicits._
-    if (!new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists()) {
-      spark.range(n).map(i => (i, docText(i)))
-        .toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    Probe.cached(s"$dir/documents.parquet") { path =>
+      spark.range(n).map(i => (i, docText(i))).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(path)
     }
-    if (!new java.io.File(s"$dir/embeddings.parquet/_SUCCESS").exists()) {
-      spark.range(n).map(i => (i, embedding(i, dim)))
-        .toDF("vec_id", "embedding")
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    Probe.cached(s"$dir/embeddings.parquet") { path =>
+      spark.range(n).map(i => (i, embedding(i, dim))).toDF("vec_id", "embedding")
+        .write.mode("overwrite").parquet(path)
     }
     dir
-  }
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
   }
 
   /** Planted truth: (i-1, i) for every i ≡ 99 (mod 100) below n. */
@@ -149,7 +141,7 @@ object FamilyScaleProbe {
 
     // ---- winnow fingerprint index (the real catalog operator)
     locally {
-      val (cnt, wall) = time(graft.Queries.ddWinnowPairs(spark, dir).count())
+      val (cnt, wall) = timed(graft.Queries.ddWinnowPairs(spark, dir).count())
       val fp = graft.Queries.docNorm(spark, dir)
         .where(length(col("norm")) > 0)
         .select(col("doc_id"), explode(graft.functions.SigExprs
@@ -170,7 +162,7 @@ object FamilyScaleProbe {
 
     // ---- CDC chunking (per-doc stats rolled up)
     locally {
-      val ((chunks, saved), wall) = time {
+      val ((chunks, saved), wall) = timed {
         val r = graft.Queries.ddCdc(spark, dir)
           .agg(sum(col("n_chunks")), sum(col("bytes_saved"))).head()
         (r.getLong(0), r.getLong(1))
@@ -195,7 +187,7 @@ object FamilyScaleProbe {
       val edges = graft.ops.Embeddings.semanticPairs(vecs, 0.4, numCells = cells,
           centroids = Some(cents))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (nPairs, wallP) = time(edges.count())
+      val (nPairs, wallP) = timed(edges.count())
       val recall = plantedRecall(spark, edges, n)
       // candidate volume = within-cell pair rows of the same assignment
       val assign = graft.ops.Embeddings.ivfCellAssigner(cents, 2)
@@ -203,7 +195,7 @@ object FamilyScaleProbe {
         .groupBy("cell").agg(count(lit(1)).as("m"))
         .agg(count(lit(1)).as("cells"), max(col("m")).as("max_cell"),
           sum((col("m") * (col("m") - 1) / 2).cast("long")).as("cand_pairs")).head()
-      val (roles, wallD) = time {
+      val (roles, wallD) = timed {
         graft.ops.Embeddings.dbscanFromEdges(vecs, edges.select(col("id1"), col("id2")),
           graft.ExtQueries.dbscanMinPts)
           .groupBy("role").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -230,7 +222,7 @@ object FamilyScaleProbe {
           sum(when(col("bn").between(2, graft.Queries.bucketCap),
             (col("bn") * (col("bn") - 1) / 2).cast("long")).otherwise(0L)).as("cand_pairs"))
         .head()
-      val (pairsDf, wall) = time {
+      val (pairsDf, wall) = timed {
         // 0.4: planted dupes share 10 content keys whose buckets survive
         // the cap but their 2 shared corpus-common keys sit in capped
         // buckets, so the INDEXED overlap is 10/22 ≈ 0.45 — the same
@@ -254,17 +246,10 @@ object FamilyScaleProbe {
     out.toMap
   }
 
-  private def js(v: Any): String = v match {
-    case m: Map[_, _] =>
-      m.map { case (k, x) => "\"" + k + "\":" + js(x) }.mkString("{", ",", "}")
-    case d: Double => f"$d%.4f"
-    case other => other.toString
-  }
-
   def main(args: Array[String]): Unit = {
     val n1 = args.headOption.map(_.toLong).getOrElse(250000L)
     val n2 = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val cores = args.lift(2).map(_.toInt).getOrElse(32)
+    val cores = Probe.cores(args, 2)
     val spark = Bench.session(cores)
     try {
       val r1 = probe(spark, n1)
@@ -278,13 +263,8 @@ object FamilyScaleProbe {
       val g = fams.map(f => f -> Map(
         "cand_growth" -> growth(f, "cand_pairs"),
         "wall_growth" -> growth(f, "wall_sec"))).toMap
-      val json = js(Map(
-        "n_ratio" -> n2.toDouble / n1,
-        "scale_1" -> r1, "scale_2" -> r2, "growth" -> g))
-      val outPath = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "family_scale_probe.json")
-      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(json)
+      Probe.emit("family", Map(
+        "n_ratio" -> n2.toDouble / n1, "scale_1" -> r1, "scale_2" -> r2, "growth" -> g))
     } finally spark.stop()
   }
 }
