@@ -106,8 +106,8 @@ object Checkpoints {
   }
 
   /** Full pipeline with per-stage checkpoints: resumable end-to-end run.
-    * Stages: features, candidates (+skew sidecar), scored, assign_tc,
-    * assign_refined, canonical.
+    * Stages: features, candidates (+skew sidecar), scored, assign_tc
+    * (+CC rounds sidecar), assign_refined (+splits sidecar), canonical.
     */
   def runCheckpointed(spark: SparkSession, images: DataFrame, workDir: String,
                       cfg: graft.model.DedupConfig): DataFrame = {
@@ -128,8 +128,14 @@ object Checkpoints {
     // the unchanged (id, cluster_id) shape.
     def withPb(df: DataFrame): DataFrame =
       df.withColumn("pb", pmod(xxhash64(col("id")), lit(16)).cast("int"))
+    // CC explains its rounds the same way: the stats arrive only when the
+    // stage computes, so a resumed run keeps the original sidecar
+    var ccStats = Option.empty[graft.cluster.ConnectedComponents.Stats]
     val assign0 = cp.stage("04_assign_tc", partitionBy = Seq("pb"))(
-      withPb(Pipeline.cluster(feats, scored))).drop("pb")
+      withPb(Pipeline.cluster(feats, scored, s => ccStats = Some(s)))).drop("pb")
+    ccStats.foreach(s => cp.writeMetrics("04_assign_tc_cc",
+      s"""{"stage":"04_assign_tc","distributed_rounds":${s.distributedRounds},""" +
+        s""""driver_edges":${s.driverEdges}}"""))
     // ClusterSplitHandler contract (ref core/.../ClusterSplitHandler.java:
     // 37-69; SURVEY.md §2.5): splits are observable in metrics. The counter
     // only accumulates when the stage actually computes, so the sidecar is

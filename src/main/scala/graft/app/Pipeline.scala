@@ -145,19 +145,23 @@ object Pipeline {
   /** Stage 4: transitive clustering over DUPLICATE edges only
     * (ref `TransitiveClosure.java:72-79`). Record universe comes from the
     * (persisted, payload-free) feature table.
+    *
+    * @param onStats receives the CC run's distributed rounds and
+    *        driver-finished edges (see [[ConnectedComponents.Stats]])
     */
-  def cluster(feats: DataFrame, scored: Dataset[ScoredEdge]): DataFrame = {
+  def cluster(feats: DataFrame, scored: Dataset[ScoredEdge],
+              onStats: ConnectedComponents.Stats => Unit = _ => ()): DataFrame = {
     val dupEdges = scored.where(col("classification") === Classification.Duplicate)
       .select(col("id1"), col("id2"))
-    ConnectedComponents.assignAll(feats, "id", dupEdges)
+    ConnectedComponents.assignAll(feats, "id", dupEdges, onStats)
   }
 
   /** Stage 5: precision refinement — per-cluster exact/greedy re-partition
     * (ref `RefineClusterImpl`), run in a cogroup over (members, scored
     * edges); clusters above `maxRefineSize` pass through (guard, SURVEY.md
     * §7.5 risk 3). Splits only — never merges (§7.1.5).
-    */
-  /** @param splitCounter optional accumulator counting split clusters —
+    *
+    * @param splitCounter optional accumulator counting split clusters —
     *        the report-only analog of the reference's ClusterSplitHandler
     *        veto callback (`core/dedupe/clustering/ClusterSplitHandler
     *        .java:37-69`; SURVEY.md §2.5: splits logged to metrics)

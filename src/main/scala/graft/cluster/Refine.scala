@@ -197,14 +197,21 @@ object Refine {
     * weight matrix), `classify` recomputes missing pairs. Returns the
     * partition labels; clusters of size <= 2 pass through unchanged
     * (ref `refineCluster`, :242-250).
+    *
+    * `known` is put in (l, r, w) order first: callers build it from a
+    * cogroup iterator whose order follows the physical plan, and the seeded
+    * shuffles in [[refineBig]] (like last-wins duplicate weights below)
+    * would otherwise turn that order into different labels.
     */
   def refineCluster(n: Int, known: List[WEdge], classify: (Int, Int) => Double,
                     maxSmall: Int, seed: Long): Array[Int] = {
+    val edges = known.sortBy(e => (e.l, e.r, e.w))(
+      Ordering.Tuple3(Ordering.Int, Ordering.Int, Ordering.Double.TotalOrdering))
     if (n <= 2) Array.fill(n)(0)
-    else if (n > maxSmall) refineBig(n, known, classify, maxSmall, seed)
+    else if (n > maxSmall) refineBig(n, edges, classify, maxSmall, seed)
     else {
       val w = Array.fill(n, n)(Double.NaN)
-      known.foreach(e => w(math.min(e.l, e.r))(math.max(e.l, e.r)) = e.w)
+      edges.foreach(e => w(math.min(e.l, e.r))(math.max(e.l, e.r)) = e.w)
       refineSmall(n, w, classify)
     }
   }

@@ -253,6 +253,20 @@ class KernelSpec extends AnyFunSuite {
     assert(labels.distinct.length == 1) // all same name => one cluster
   }
 
+  test("refine labels a big cluster independently of its known-edge order") {
+    // 20 members (> maxSmall = 4), all 190 pairs known with tied weights:
+    // the sampled subset and the greedy tie order both come from `known`,
+    // so only a canonical edge order makes the labels order-free
+    val rnd = new scala.util.Random(5)
+    val known = (for (i <- 0 until 20; j <- i + 1 until 20)
+      yield WEdge.of(i, j, if (rnd.nextInt(3) == 0) 1.0 else -1.0)).toList
+    def classify(i: Int, j: Int): Double = if ((i + j) % 3 == 0) 1.0 else -1.0
+    val orders = Seq(known, known.reverse) ++
+      (1 to 4).map(k => new scala.util.Random(k).shuffle(known))
+    val labels = orders.map(o => Refine.refineCluster(20, o, classify, maxSmall = 4, seed = 9L).toSeq)
+    assert(labels.distinct.size == 1, s"labels depend on edge order: ${labels.distinct}")
+  }
+
   // ------------------------------------------------------------- fusion
 
   test("fusion resolutions: reference semantics (CommonConflictResolutions)") {

@@ -34,19 +34,27 @@ class OpsSpec extends AnyFunSuite {
     (0L until n.toLong).map(i => i -> find(i)).toMap
   }
 
-  private def ccOf(edges: Seq[(Long, Long)], n: Int): Map[Long, Long] = {
+  /** CC at a driver-finish bound: 0 runs the distributed rounds on any
+    * non-empty graph, the default finishes these small graphs on the
+    * driver. Isolated nodes map to themselves, as in `assignAll`.
+    */
+  private def ccOf(edges: Seq[(Long, Long)], n: Int, localEdges: Long): Map[Long, Long] = {
     import spark.implicits._
-    val e = edges.toDF("src", "dst")
-    val nodes = (0L until n.toLong).toDF("id")
-    ConnectedComponents.assignAll(nodes, "id", e)
+    val got = ConnectedComponents.run(edges.toDF("src", "dst"), localEdges = localEdges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (0L until n.toLong).map(i => i -> got.getOrElse(i, i)).toMap
   }
+
+  private val bounds = Seq(0L, ConnectedComponents.LocalEdges)
 
   test("CC matches union-find on a long chain (worst case for label propagation)") {
     val n = 200
     val chain = (0L until n - 1L).map(i => (i, i + 1))
-    val got = ccOf(chain, n)
-    assert(got.values.toSet == Set(0L), "single chain must collapse to min id 0")
+    bounds.foreach { b =>
+      val got = ccOf(chain, n, b)
+      assert(got.values.toSet == Set(0L), s"single chain must collapse to min id 0 (bound $b)")
+      assert(got == ufComponents(n, chain), s"bound $b")
+    }
   }
 
   test("CC matches union-find on random graphs") {
@@ -54,17 +62,57 @@ class OpsSpec extends AnyFunSuite {
     val n = 300
     val edges = Seq.fill(250)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       .filter { case (a, b) => a != b }
-    val got = ccOf(edges, n)
     val exp = ufComponents(n, edges)
     // same partition: representative choice is min id in both
-    assert(got == exp)
+    bounds.foreach(b => assert(ccOf(edges, n, b) == exp, s"bound $b"))
   }
 
   test("CC handles star graphs and isolated nodes") {
     val star = (1L until 50L).map(i => (0L, i))
-    val got = ccOf(star, 60)
-    assert((0L until 50L).forall(i => got(i) == 0L))
-    assert((50L until 60L).forall(i => got(i) == i), "isolated nodes are singletons")
+    bounds.foreach { b =>
+      val got = ccOf(star, 60, b)
+      assert(got == ufComponents(60, star), s"bound $b")
+      assert((0L until 50L).forall(i => got(i) == 0L))
+      assert((50L until 60L).forall(i => got(i) == i), "isolated nodes are singletons")
+    }
+  }
+
+  test("CC on an empty edge set returns no rows and runs no round") {
+    import spark.implicits._
+    bounds.foreach { b =>
+      var stats = Option.empty[ConnectedComponents.Stats]
+      val out = ConnectedComponents.run(Seq.empty[(Long, Long)].toDF("src", "dst"),
+        localEdges = b, onStats = s => stats = Some(s))
+      assert(out.collect().isEmpty, s"bound $b")
+      assert(stats.contains(ConnectedComponents.Stats(0, 0L)), s"bound $b: $stats")
+    }
+  }
+
+  test("CC hands a converged tail to the driver mid-loop") {
+    // a 30-clique (435 edges) is over the bound; one round collapses it to
+    // the 29-edge star on member 0, which fits and finishes on the driver
+    val clique = for (i <- 0L until 30L; j <- i + 1 until 30L) yield (i, j)
+    import spark.implicits._
+    var stats = Option.empty[ConnectedComponents.Stats]
+    val got = ConnectedComponents.run(clique.toDF("src", "dst"), localEdges = 100L,
+      onStats = s => stats = Some(s))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(stats.contains(ConnectedComponents.Stats(1, 29L)), s"$stats")
+    assert(got == ufComponents(30, clique))
+  }
+
+  test("CC string cluster ids are the UTF-8 minimum on both paths") {
+    // U+FF61 < U+1F600 in UTF-8 bytes (EF.. < F0..), but the emoji's UTF-16
+    // surrogate (D83D) sorts first under java.lang.String.compareTo
+    import spark.implicits._
+    val (emoji, halfwidthStop) = ("\uD83D\uDE00", "\uFF61")
+    val edges = Seq((emoji, halfwidthStop), ("y", "x")).toDF("src", "dst")
+    bounds.foreach { b =>
+      val got = ConnectedComponents.run(edges, localEdges = b)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == Map(emoji -> halfwidthStop, halfwidthStop -> halfwidthStop,
+        "x" -> "x", "y" -> "x"), s"bound $b")
+    }
   }
 
   test("SRP-LSH ANN recall >= 0.9 of brute-force threshold pairs") {

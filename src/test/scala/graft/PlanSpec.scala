@@ -643,6 +643,26 @@ class PlanSpec extends AnyFunSuite {
       s"no exchange-free path from output to the standing scan:\n$plan")
   }
 
+  test("connected components under the driver-finish bound start at most 2 jobs") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val rnd = new scala.util.Random(3)
+    val edges = Seq.fill(400)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      .toDF("src", "dst")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.cluster.ConnectedComponents.run(edges)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // one count, then one collect that the driver finishes from
+    assert(jobs.get <= 2, s"CC on a 400-edge graph started ${jobs.get} jobs")
+  }
+
   test("ds_shuffle rides the two-phase prefix sum: bucketed window + " +
     "broadcast offsets, no global sort, no single-partition stage") {
     import spark.implicits._

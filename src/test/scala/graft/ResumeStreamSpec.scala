@@ -54,6 +54,16 @@ class ResumeStreamSpec extends AnyFunSuite {
     val splits = cp.metrics("05_assign_refined_splits").get
     assert(splits.contains("\"n_split_clusters\":"),
       s"splits sidecar must carry the split count: $splits")
+    // CC reports its rounds: this corpus is far under the driver-finish
+    // bound, so no distributed round runs and every DUPLICATE edge
+    // finishes on the driver
+    val ccSide = cp.metrics("04_assign_tc_cc").get
+    val dupEdges = cp.load("03_scored")
+      .where(col("classification") === graft.model.Classification.Duplicate &&
+        col("id1") =!= col("id2"))
+      .select(col("id1"), col("id2")).distinct().count()
+    assert(dupEdges > 0 && ccSide.contains("\"distributed_rounds\":0,") &&
+      ccSide.contains(s"\"driver_edges\":$dupEdges}"), s"cc sidecar: $ccSide vs $dupEdges edges")
     // a missing sidecar marks the stage incomplete (crash-window safety)
     Files.delete(Paths.get(s"$work/03_scored_metrics.json"))
     assert(!cp.isComplete("03_scored"))
