@@ -1000,56 +1000,26 @@ SELECT path, CAST(max(n_steps) AS BIGINT) AS n_steps, count(*) AS n_users
 FROM p GROUP BY 1
 ORDER BY n_users DESC, path LIMIT $topPathsN"""
 
-  /** Refinement over the cc_clusters partition: per-cluster exact/greedy
-    * re-partition with jaccard-derived signed weights (the RefineCluster
-    * port running in a cogroup). The planted near-dup clusters are
-    * all-positive-weight cliques, so refinement must keep them whole —
-    * the oracle is therefore the CC oracle itself, and any spurious split
-    * fails the hash compare.
+  /** Refinement over the cc_clusters partition by
+    * [[graft.cluster.Refine.refineAll]], with Jaccard-threshold signed
+    * weights. The planted near-dup clusters are all-positive-weight cliques,
+    * so refinement must keep them whole — the oracle is therefore the CC
+    * oracle itself, and any spurious split fails the hash compare.
     */
   def refineClusters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    import graft.cluster.Refine
     val t = Queries.ngramJaccardT
     // every input below is a shared persisted stage — nothing recomputed
-    val assign = Queries.ccAssign(spark, dir).toDF("doc_id", "cluster_id")
-    val feats = Queries.docHashedShingles(spark, dir).toDF("doc_id", "shs")
-    val scored = Queries.ddNgramJaccard(spark, dir)
-      .select(col("id1"), col("id2"), col("jaccard"))
-
-    val members = assign.join(feats, Seq("doc_id"))
-      .select(col("cluster_id"), col("doc_id"), col("shs"))
-      .as[(Long, Long, Seq[Long])]
-    val edges = scored.withColumnRenamed("id1", "doc_id")
-      .join(assign, Seq("doc_id"))
-      .select(col("cluster_id"), col("doc_id").as("id1"), col("id2"), col("jaccard"))
-      .as[(Long, Long, Long, Double)]
-
-    members.groupByKey(_._1).cogroup(edges.groupByKey(_._1)) { (cid, ms, es) =>
-      val mem = ms.toArray.sortBy(_._2)
-      if (mem.length <= 2) mem.iterator.map(m => (m._2, cid))
-      else {
-        val idx = mem.iterator.map(_._2).zipWithIndex.toMap
-        val known = es.flatMap { e =>
-          for (i <- idx.get(e._2); j <- idx.get(e._3))
-            yield graft.cluster.Refine.WEdge.of(i, j,
-              if (e._4 >= t) (e._4 - t) / (1 - t) else -(t - e._4) / t)
-        }.toList
-        def classify(i: Int, j: Int): Double = {
-          val a = mem(i)._3.toSet; val b = mem(j)._3.toSet
-          val u = (a ++ b).size
-          val jac = if (u == 0) 1.0 else (a & b).size.toDouble / u
-          if (jac >= t) (jac - t) / (1 - t) else -(t - jac) / t
-        }
-        val labels = graft.cluster.Refine.refineCluster(
-          mem.length, known, classify, maxSmall = 10,
-          seed = Signatures.hash60(cid.toString))
-        val byLabel = mem.indices.groupBy(labels(_))
-        byLabel.iterator.flatMap { case (_, is) =>
-          val newId = is.map(mem(_)._2).min
-          is.iterator.map(i => (mem(i)._2, newId))
-        }
-      }
-    }.toDF("doc_id", "cluster_id")
+    val scored = Classifier.classify(Queries.ddNgramJaccard(spark, dir),
+      Classifier.thresholdRule("jaccard", col("jaccard"), t))
+    Refine.refineAll[Long, Seq[Long]](
+      Queries.ccAssign(spark, dir),
+      Queries.docHashedShingles(spark, dir),
+      scored.select(col("id1"), col("id2"),
+        Refine.classificationWeight(col("classification"), col("confidence"))),
+      (a, b) => Refine.thresholdWeight(graft.similarity.ScalarSims.jaccard[Long](a, b), t))
+      .toDF("doc_id", "cluster_id")
   }
 
   /** Materialized last-wins dedup (ref `Deduplication
@@ -2203,9 +2173,7 @@ FROM b"""
     feats.count() // fan-out barrier: see Pipeline.run
     val scored = Pipeline.classified(feats, Pipeline.candidates(feats, cfg), cfg)
     val assign = Pipeline.cluster(feats, scored)
-    val slim = df.select(col("image_id"), col("caption"), col("fmt"),
-      col("w"), col("h"), col("phash"))
-    Pipeline.fuse(slim, assign).toDF()
+    Pipeline.fuse(df, assign).toDF()
       .select(col("cluster_id"), col("n_members"), col("image_id"),
         col("caption"), col("fmt"))
   }

@@ -172,32 +172,6 @@ cands AS (
   FROM bkok k JOIN bkeys a ON a.key = k.key JOIN bkeys b ON b.key = k.key AND a.doc_id < b.doc_id)"""
   }
 
-  /** SRP-LSH candidate CTEs mirroring Embeddings.lshBuckets exactly: the
-    * ±1 hyperplanes are hash60-parity-derived, so they are emitted here as
-    * literal DOUBLE vectors; `list_dot_product` over `::DOUBLE[]` matches
-    * Spark's sequential zip_with/aggregate fold bit-for-bit, and the sign
-    * test, band keys and bucket cap are integer-exact.
-    * Produces CTEs e(vec_id, v) and cands(id1, id2).
-    */
-  def srpLshCtes(dim: Int, bits: Int, bands: Int, seed: Long, cap: Int): String = {
-    val per = bits / bands
-    val mask = (1L << per) - 1
-    val bitTerms = (0 until bits).map { b =>
-      val plane = (0 until dim).map(d =>
-        if ((Signatures.hash60(s"srp:$seed:$b:$d") & 1L) == 1L) "1.0" else "-1.0").mkString(", ")
-      s"(CASE WHEN list_dot_product(v, [$plane]) > 0 THEN ${1L << b} ELSE 0 END)"
-    }.mkString("\n    + ")
-    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM ${OracleGen.embSrc}),
-srp AS (SELECT vec_id, v, $bitTerms AS sig FROM e),
-bkeys AS (
-  SELECT vec_id, g.i || ':' || ((sig >> (g.i * $per)) & $mask) AS key
-  FROM srp CROSS JOIN generate_series(0, ${bands - 1}) AS g(i)),
-bok AS (SELECT key FROM bkeys GROUP BY key HAVING count(*) BETWEEN 2 AND $cap),
-cands AS (
-  SELECT DISTINCT least(a.vec_id, b.vec_id) AS id1, greatest(a.vec_id, b.vec_id) AS id2
-  FROM bok k JOIN bkeys a ON a.key = k.key JOIN bkeys b ON b.key = k.key AND a.vec_id < b.vec_id)"""
-  }
-
   /** Multi-probe SRP-LSH top-k CTEs mirroring Embeddings.lshTopKMultiProbe
     * exactly: literal ±1 hyperplanes, per-(vector, bit) projections, base
     * band keys (sign bits, local bit p of band i = global bit i·per+p),

@@ -127,21 +127,6 @@ object Queries {
       ConnectedComponents.assignAll(table(spark, dir, "documents"), "doc_id", edges)
     }
 
-  /** Exact Jaccard verification of candidate pairs against per-id distinct
-    * shingle arrays — the pairwise classification stage
-    * (ref `CommonSimilarityMeasures.jaccard`, :88-93; SURVEY.md §2.4).
-    */
-  def jaccardVerify(cands: DataFrame, shingleArrays: DataFrame, t: Double): DataFrame = {
-    val s1 = shingleArrays.select(col("id").as("id1"), col("shs").as("sh1"))
-    val s2 = shingleArrays.select(col("id").as("id2"), col("shs").as("sh2"))
-    cands.join(s1, Seq("id1")).join(s2, Seq("id2"))
-      .withColumn("c", size(array_intersect(col("sh1"), col("sh2"))))
-      .withColumn("jaccard",
-        col("c").cast("double") / (size(col("sh1")) + size(col("sh2")) - col("c")))
-      .where(col("jaccard") >= t)
-      .select(col("id1"), col("id2"), col("jaccard"))
-  }
-
   // ------------------------------------------------------------ queries
 
   /** Exact deduplication by full-content hash (hash-groupBy; one shuffle on

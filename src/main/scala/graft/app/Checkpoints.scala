@@ -148,8 +148,6 @@ object Checkpoints {
     if (refineComputed)
       cp.writeMetrics("05_assign_refined_splits",
         s"""{"stage":"05_assign_refined","n_split_clusters":${splits.value}}""")
-    val slim = images.select(col("image_id"), col("caption"), col("fmt"),
-      col("w"), col("h"), col("phash"))
-    cp.stage("06_canonical")(Pipeline.fuse(slim, assign).toDF())
+    cp.stage("06_canonical")(Pipeline.fuse(images, assign).toDF())
   }
 }

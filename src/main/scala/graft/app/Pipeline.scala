@@ -10,7 +10,7 @@ import graft.cluster.{ConnectedComponents, Refine}
 import graft.fuse.Fusion
 import graft.model.{Classification, DedupConfig, ImageRecord}
 import graft.sig.Signatures
-import graft.similarity.Sims
+import graft.similarity.{ScalarSims, Sims}
 
 /** The full dedup pipeline over an image+caption table — the batch
   * re-expression of the reference's 4-stage flow
@@ -31,17 +31,11 @@ import graft.similarity.Sims
   */
 object Pipeline {
 
-  /** Per-record features: everything verification needs, no payload. */
-  final case class Feat(id: String, norm: String, shs: Seq[String],
-                        phash: Long, simhash: Long, chash: String)
-
   final case class ScoredEdge(id1: String, id2: String, classification: String,
                               confidence: Double, explanation: String)
 
-  final case class Member(cluster_id: String, id: String, norm: String,
-                          shs: Seq[Int], phash: Long, simhash: Long)
-
-  final case class EdgeW(cluster_id: String, id1: String, id2: String, w: Double)
+  /** Refine's per-member payload: the features its `classify` reads. */
+  final case class RefineFeat(shs: Seq[Int], phash: Long, simhash: Long)
 
   final case class Canonical(cluster_id: String, n_members: Long, image_id: String,
                              caption: String, fmt: String, w: Int, h: Int,
@@ -156,74 +150,28 @@ object Pipeline {
     ConnectedComponents.assignAll(feats, "id", dupEdges, onStats)
   }
 
-  /** Stage 5: precision refinement — per-cluster exact/greedy re-partition
-    * (ref `RefineClusterImpl`), run in a cogroup over (members, scored
-    * edges); clusters above `maxRefineSize` pass through (guard, SURVEY.md
-    * §7.5 risk 3). Splits only — never merges (§7.1.5).
-    *
-    * @param splitCounter optional accumulator counting split clusters —
-    *        the report-only analog of the reference's ClusterSplitHandler
-    *        veto callback (`core/dedupe/clustering/ClusterSplitHandler
-    *        .java:37-69`; SURVEY.md §2.5: splits logged to metrics)
+  /** Stage 5: precision refinement — [[Refine.refineAll]] over the CC
+    * assignment, with known edges weighted by their stage-3 classification
+    * and missing pairs scored by the stage-3 weighted-average rule
+    * (shingle Jaccard x2, phash and simhash Hamming similarity) at the
+    * verify threshold.
     */
   def refine(assign: DataFrame, feats: DataFrame, scored: Dataset[ScoredEdge],
-             cfg: DedupConfig, maxRefineSize: Int = 300,
+             cfg: DedupConfig,
              splitCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val spark = assign.sparkSession
     import spark.implicits._
-
-    // name-based using-joins only: assign's lineage contains feats/scored,
-    // so dataset-tagged references would be ambiguous self-joins
-    val members = assign.join(feats, Seq("id"))
-      .select(col("cluster_id"), col("id"), col("norm"), col("shs"),
-        col("phash"), col("simhash"))
-      .as[Member]
-
-    val edges = scored.toDF().withColumnRenamed("id1", "id")
-      .join(assign, Seq("id"))
-      .select(col("cluster_id"), col("id").as("id1"), col("id2"),
-        when(col("classification") === Classification.Duplicate, col("confidence"))
-          .when(col("classification") === Classification.NonDuplicate, -col("confidence"))
-          .otherwise(0.0).as("w"))
-      .as[EdgeW]
-
-    members.groupByKey(_.cluster_id)
-      .cogroup(edges.groupByKey(_.cluster_id)) { (cid, ms, es) =>
-        val mem = ms.toArray.sortBy(_.id)
-        if (mem.length <= 2 || mem.length > maxRefineSize) {
-          mem.iterator.map(m => (m.id, cid))
-        } else {
-          val idx = mem.iterator.map(_.id).zipWithIndex.toMap
-          val known = es.flatMap { e =>
-            for (i <- idx.get(e.id1); j <- idx.get(e.id2)) yield Refine.WEdge.of(i, j, e.w)
-          }.toList
-          def classify(i: Int, j: Int): Double = {
-            val a = mem(i); val b = mem(j)
-            val jac = {
-              val s1 = a.shs.toSet; val s2 = b.shs.toSet
-              val u = (s1 ++ s2).size
-              if (u == 0) 1.0 else (s1 & s2).size.toDouble / u
-            }
-            val ph = 1.0 - Signatures.hamming(a.phash, b.phash) / 64.0
-            val sh = 1.0 - Signatures.hamming(a.simhash, b.simhash) / cfg.simhashBits.toDouble
-            val s = (2 * jac + ph + sh) / 4
-            // signed threshold weight, mirroring scaleAtThreshold
-            val t = cfg.jaccardThreshold
-            if (s >= t) (s - t) / (1 - t) else -(t - s) / t
-          }
-          val seed = Signatures.hash60(cid) // deterministic per cluster
-          val labels = Refine.refineCluster(mem.length, known, classify,
-            cfg.maxSmallClusterSize, seed)
-          // new cluster id = min member id per sub-cluster (deterministic)
-          val byLabel = mem.indices.groupBy(labels(_))
-          if (byLabel.size > 1) splitCounter.foreach(_.add(1))
-          byLabel.iterator.flatMap { case (_, is) =>
-            val newId = is.map(mem(_).id).min
-            is.iterator.map(i => (mem(i).id, newId))
-          }
-        }
-      }
-      .toDF("id", "cluster_id")
+    val members = feats.select(col("id"), struct(col("shs"), col("phash"), col("simhash")))
+    val edges = scored.select(col("id1"), col("id2"),
+      Refine.classificationWeight(col("classification"), col("confidence")))
+    val t = cfg.jaccardThreshold
+    val shBits = cfg.simhashBits.toDouble
+    Refine.refineAll[String, RefineFeat](assign, members, edges, { (a, b) =>
+      val jac = ScalarSims.jaccard[Int](a.shs, b.shs)
+      val ph = 1.0 - Signatures.hamming(a.phash, b.phash) / 64.0
+      val sh = 1.0 - Signatures.hamming(a.simhash, b.simhash) / shBits
+      Refine.thresholdWeight((2 * jac + ph + sh) / 4, t)
+    }, splitCounter)
   }
 
   /** Payload-free fusion row: the binary `bytes` column never enters the

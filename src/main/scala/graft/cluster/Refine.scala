@@ -3,6 +3,16 @@ package graft.cluster
 import scala.collection.mutable
 import scala.util.Random
 
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.functions.{col, when}
+import org.apache.spark.sql.types.DataType
+import org.apache.spark.util.LongAccumulator
+
+import graft.model.Classification
+import graft.sig.Signatures
+
 /** Precision refinement of transitive-closure clusters — the port of the
   * reference's cluster-splitting stage (bakdata/dedupe
   * `common/dedupe/clustering/RefineClusterImpl.java:78-459`): small clusters
@@ -10,9 +20,10 @@ import scala.util.Random
   * (restricted-growth strings) against the full pairwise weight matrix; big
   * clusters greedily, over known edges plus sampled triangle edges.
   *
-  * All algorithms are sequential per cluster and run inside
-  * `flatMapGroups` — per-cluster data is small by construction (SURVEY.md
-  * §2.5). Deviations from the reference, both deliberate:
+  * All algorithms are sequential per cluster and run inside one cogroup
+  * ([[refineAll]], the only Dataset-level entry point) — per-cluster data is
+  * small by construction (SURVEY.md §2.5). Deviations from the reference,
+  * both deliberate:
   *  - randomness is seeded per cluster (the reference uses
   *    ThreadLocalRandom, :79 — nondeterministic);
   *  - greedy edges are visited in descending weight (the reference
@@ -21,16 +32,101 @@ import scala.util.Random
   */
 object Refine {
 
-  /** Edge weight from a classification (ref `getWeight`, :104-115):
-    * DUPLICATE => +confidence, NON_DUPLICATE => -confidence,
-    * UNKNOWN => -0.0 (no weight).
+  /** Exact-partition cutoff: clusters of at most this many members are
+    * re-partitioned exactly, bigger ones greedily (ref
+    * `RefineClusterImpl.java:86` default).
     */
-  def classificationWeight(classification: String, confidence: Double): Double =
-    classification match {
-      case graft.model.Classification.Duplicate => confidence
-      case graft.model.Classification.NonDuplicate => -confidence
-      case _ => -0.0d
-    }
+  val MaxSmall = 10
+
+  /** Size guard: clusters above this many members pass through whole
+    * (SURVEY.md §7.5 risk 3) — every greedy merge rescores the O(n²)
+    * weight matrix.
+    */
+  val MaxRefine = 300
+
+  /** Edge weight from a classification (ref `getWeight`, :104-115):
+    * DUPLICATE => +confidence, NON_DUPLICATE => -confidence, any other
+    * class => 0 (no weight).
+    */
+  def classificationWeight(classification: Column, confidence: Column): Column =
+    when(classification === Classification.Duplicate, confidence)
+      .when(classification === Classification.NonDuplicate, -confidence)
+      .otherwise(0.0)
+
+  /** Signed weight of similarity `s` at threshold `t` — the weight
+    * [[classificationWeight]] gives the outcome of
+    * [[graft.classify.Classifier.thresholdRule]] (ref `scaleAtThreshold`).
+    */
+  def thresholdWeight(s: Double, t: Double): Double =
+    if (s >= t) (s - t) / (1 - t) else -(t - s) / t
+
+  /** Refine every cluster of a CC assignment in one cogroup over
+    * (members, known edges) — clusters are only split, never merged
+    * (SURVEY.md §7.1.5).
+    *
+    * Per cluster: members are sorted by id under the id type's Spark
+    * ordering (UTF-8 byte order for strings, the order CC's `min` uses) and
+    * indexed; known edges with both endpoints inside become [[WEdge]]s;
+    * clusters of at most 2 or more than [[MaxRefine]] members pass through
+    * with their CC id; the rest go to [[refineCluster]] with cutoff
+    * [[MaxSmall]] and the seed `hash60(cluster_id)`, and each part is named
+    * by its minimum member id — so an unsplit cluster keeps its CC id.
+    *
+    * @param assign   CC assignment (id, cluster_id)
+    * @param members  (id, payload): the payload, decoded as `P`, is all that
+    *                 `classify` reads
+    * @param edges    known edges (id1, id2, w) with signed weights
+    *                 ([[classificationWeight]])
+    * @param classify signed weight of a pair no known edge scores
+    * @param splitCounter optional accumulator counting split clusters —
+    *        the report-only analog of the reference's ClusterSplitHandler
+    *        veto callback (`core/dedupe/clustering/ClusterSplitHandler
+    *        .java:37-69`; SURVEY.md §2.5: splits logged to metrics)
+    * @return (id, cluster_id) for every assigned id
+    */
+  def refineAll[K: Encoder, P: Encoder](
+      assign: DataFrame, members: DataFrame, edges: DataFrame,
+      classify: (P, P) => Double,
+      splitCounter: Option[LongAccumulator] = None): DataFrame = {
+    val kEnc = implicitly[Encoder[K]]
+    val idType = assign.schema("id").dataType
+    // name-based using-joins only: assign's lineage may contain the inputs
+    // of members/edges, so dataset-tagged references would be ambiguous
+    // self-joins
+    val ms = assign.join(members.toDF("id", "p"), Seq("id"))
+      .select(col("cluster_id"), col("id"), col("p"))
+      .as(Encoders.tuple(kEnc, kEnc, implicitly[Encoder[P]]))
+    val es = edges.toDF("id", "id2", "w").join(assign, Seq("id"))
+      .select(col("cluster_id"), col("id"), col("id2"), col("w"))
+      .as(Encoders.tuple(kEnc, kEnc, kEnc, Encoders.scalaDouble))
+
+    ms.groupByKey(_._1)(kEnc).cogroup(es.groupByKey(_._1)(kEnc)) { (cid, mIt, eIt) =>
+      val all = mIt.toArray
+      if (all.length <= 2 || all.length > MaxRefine) all.iterator.map(m => (m._2, cid))
+      else {
+        val mem = all.sortBy(_._2)(idOrdering(idType))
+        val idx = mem.iterator.map(_._2).zipWithIndex.toMap
+        val known = eIt.flatMap { e =>
+          for (i <- idx.get(e._2); j <- idx.get(e._3)) yield WEdge.of(i, j, e._4)
+        }.toList
+        val labels = refineCluster(mem.length, known,
+          (i, j) => classify(mem(i)._3, mem(j)._3), MaxSmall, Signatures.hash60(cid.toString))
+        val byLabel = mem.indices.groupBy(labels(_))
+        if (byLabel.size > 1) splitCounter.foreach(_.add(1))
+        // members are sorted, so a part's smallest index is its minimum id
+        byLabel.valuesIterator.flatMap { is =>
+          val newId = mem(is.min)._2
+          is.iterator.map(i => (mem(i)._2, newId))
+        }
+      }
+    }(Encoders.tuple(kEnc, kEnc)).toDF("id", "cluster_id")
+  }
+
+  /** Spark's ordering of `idType` over its external (Scala) values. */
+  private def idOrdering[K](idType: DataType): Ordering[K] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    Ordering.by[K, Any](toCatalyst)(PhysicalDataType.ordering(idType))
+  }
 
   /** Partition quality (ref `scoreClustering`, :117-137): intra-pair weight
     * is amortized over partition size; inter-pair weight penalizes both
@@ -198,8 +294,8 @@ object Refine {
     * partition labels; clusters of size <= 2 pass through unchanged
     * (ref `refineCluster`, :242-250).
     *
-    * `known` is put in (l, r, w) order first: callers build it from a
-    * cogroup iterator whose order follows the physical plan, and the seeded
+    * `known` is put in (l, r, w) order first: [[refineAll]] builds it from
+    * a cogroup iterator whose order follows the physical plan, and the seeded
     * shuffles in [[refineBig]] (like last-wins duplicate weights below)
     * would otherwise turn that order into different labels.
     */

@@ -72,15 +72,13 @@ final case class Edge(src: String, dst: String, weight: Double)
   * @param bands         LSH bands b (numHashes = bands * rowsPerBand)
   * @param simhashBits   SimHash width (<=60: fits the shared 60-bit hash)
   * @param simhashBandBits bits per simhash band-table block
-  * @param jaccardThreshold  verify threshold on caption shingle Jaccard
-  * @param hammingThreshold  verify threshold on phash/simhash Hamming distance
+  * @param jaccardThreshold  verify threshold on the weighted caption/phash/
+  *        simhash similarity (Pipeline.classified)
   * @param phashBlocks   pigeonhole blocks over the 64-bit phash (4 x 16-bit
   *        blocks guarantee capture at Hamming <= 3 — covers lossy re-encode;
   *        more blocks catch larger distances but explode buckets on
   *        low-entropy images)
   * @param maxBucketSize LSH band-bucket cap (skew guard; dropped pairs counted)
-  * @param maxSmallClusterSize refine exact-partition cutoff
-  *        (ref `RefineClusterImpl.java:86` default 10)
   */
 final case class DedupConfig(
     shingleK: Int = 5,
@@ -103,21 +101,20 @@ final case class DedupConfig(
     // image-side recall comes from the caption passes of the union.
     //
     // CAPTURE CONTRACT of the bit-block passes: the pigeonhole guarantee is
-    // Hamming <= blocks-1 (simhash <= 2, phash <= 1) — NOT hammingThreshold.
-    // Pairs in the 3..hammingThreshold (resp. 2..hammingThreshold) band are
-    // caught only by the cross-pass union (LSH/exact/substring), so their
-    // recall is measured, not guaranteed: the pipeline recall gate
-    // (PipelineSpec, n=1000) and the pairs_dropped sidecars are the
-    // evidence, and hold for the synthetic generator's duplicate mix. If
-    // hammingThreshold or the block geometry changes — or the corpus
-    // clusters its near-dups in that band — RETUNE blocks against a fresh
-    // measured-recall run (the traced benchmark run's block.pairs.* and
-    // block.dup_yield.* per pass) rather than trusting this comment.
+    // Hamming <= blocks-1 (simhash <= 2, phash <= 1). The verifier has no
+    // Hamming cutoff — Hamming similarities enter its weighted average — so
+    // a DUPLICATE pair whose hashes differ in more bits than that is caught
+    // only by the cross-pass union (LSH/exact/substring), and its recall is
+    // measured, not guaranteed: the pipeline recall gates (PipelineSpec,
+    // n=1000 and n=3000) and the pairs_dropped sidecars are the evidence,
+    // and hold for the synthetic generator's duplicate mix. If the block
+    // geometry changes — or the corpus puts its near-dups beyond the
+    // pigeonhole distance — RETUNE blocks against a fresh measured-recall
+    // run (the traced benchmark run's block.pairs.* and block.dup_yield.*
+    // per pass) rather than trusting this comment.
     phashBlocks: Int = 2,
     jaccardThreshold: Double = 0.8,
-    hammingThreshold: Int = 8,
     maxBucketSize: Int = 64,
-    maxSmallClusterSize: Int = 10,
     seed: Long = 42L) {
   require(numHashes % bands == 0, "numHashes must be divisible by bands")
   def rowsPerBand: Int = numHashes / bands

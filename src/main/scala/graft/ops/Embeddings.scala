@@ -21,9 +21,6 @@ object Embeddings {
     */
   def dotCol(a: Column, b: Column): Column = graft.functions.FloatDotProduct(a, b)
 
-  def cosineCol(a: Column, b: Column): Column =
-    dotCol(a, b) / (sqrt(dotCol(a, a)) * sqrt(dotCol(b, b)))
-
   /** sqrt(v·v), hoisted ONCE per vector before pairing — the O(n) side of
     * the O(n²) cosine computation (norm value identical to computing it
     * per pair, so oracle hashes are unchanged).

@@ -1,7 +1,7 @@
 package graft.similarity
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{soundex, udf}
+import org.apache.spark.sql.functions.udf
 
 /** Phonetic codec transforms (ref `CommonTransformations.java:74-139`):
   * soundex is a Spark built-in; cologne / refined-soundex / beider-morse
@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions.{soundex, udf}
   * (`equality.of(soundex())` composition in the reference).
   */
 object Phonetics {
-
-  def soundexCol(c: Column): Column = soundex(c)
 
   val cologne: Column => Column = {
     val f = udf((s: String) =>

@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.Pipeline
+import graft.cluster.Refine
 import graft.gen.ImageGen
 import graft.model.{Classification, DedupConfig}
 import graft.sig.Signatures
@@ -116,11 +118,11 @@ class PipelineSpec extends AnyFunSuite {
 
   test("recall holds at a second corpus size (n=3000): capture is not tuned to one n") {
     // The bit-block passes only GUARANTEE capture at Hamming <= 2 (simhash)
-    // / <= 1 (phash); pairs in the 3..hammingThreshold band rely on the
+    // / <= 1 (phash); duplicates beyond that pigeonhole distance rely on the
     // cross-pass union (Model.scala capture contract). That coverage is
     // measured, so gate it at more than one corpus size — bucket occupancy
     // and cross-pass overlap both shift with n, and a retune that only
-    // watches n=1000 could silently trade away the band.
+    // watches n=1000 could silently trade that coverage away.
     val n2 = 3000L
     val gen2 = (0L until n2).map(i => ImageGen.record(seed, i, n2))
     val feats2 = oracleFeatures(gen2)
@@ -163,6 +165,55 @@ class PipelineSpec extends AnyFunSuite {
       val tcClusters = m.keys.map(before).toSet
       assert(tcClusters.size == 1, s"refined cluster spans TC clusters: $tcClusters")
     }
+  }
+
+  /** Refine.refineAll's contract on one id type: clusters of 2 and of
+    * Refine.MaxRefine + 1 members pass through under their CC id, a 5-member
+    * cluster with only negative weights splits into singletons named by
+    * their own ids, and the split counter counts that one split.
+    */
+  def checkRefineContract[K](id: Int => K)(implicit enc: Encoder[K]): Unit = {
+    val s = spark
+    import s.implicits._
+    val clusters = Seq(0 until 2, 10 until 15, 1000 to 1000 + Refine.MaxRefine)
+    val assign = spark.createDataset(
+      clusters.flatMap(c => c.map(i => (id(i), id(c.head)))))(Encoders.tuple(enc, enc))
+      .toDF("id", "cluster_id")
+    val members = assign.select(col("id"), lit(0).as("p"))
+    val neg = Seq(0 -> 1) ++ (for (i <- 10 until 15; j <- i + 1 until 15) yield i -> j)
+    val edges = spark.createDataset(neg.map { case (i, j) => (id(i), id(j), -1.0) })(
+      Encoders.tuple(enc, enc, Encoders.scalaDouble)).toDF("id1", "id2", "w")
+    val splits = spark.sparkContext.longAccumulator
+    val got = Refine.refineAll[K, Int](assign, members, edges, (_, _) => -1.0, Some(splits))
+      .as(Encoders.tuple(enc, enc)).collect().toMap
+    val expected = clusters.flatMap { c =>
+      c.map(i => id(i) -> (if (c.size == 5) id(i) else id(c.head)))
+    }.toMap
+    assert(got == expected)
+    assert(splits.value == 1)
+  }
+
+  test("refineAll passes through clusters of <= 2 and > MaxRefine members and splits " +
+    "on negative weights, for Long and String ids") {
+    checkRefineContract[Long](_.toLong)(Encoders.scalaLong)
+    checkRefineContract[String](i => f"r$i%05d")(Encoders.STRING)
+  }
+
+  test("refine names an unsplit cluster by its UTF-8 minimum id, as CC does") {
+    val s = spark
+    import s.implicits._
+    // UTF-8 byte order: U+FF61 < U+1F600; UTF-16 (java.lang.String) order
+    // puts the surrogate pair of U+1F600 first
+    val ids = Seq("\uFF61", "\uFF61\uFF61", "\uD83D\uDE00")
+    val feats = ids.map(i => (i, "same caption", Seq(1, 2, 3), 7L, 9L))
+      .toDF("id", "norm", "shs", "phash", "simhash")
+    val scored = (for (a <- ids; b <- ids if a < b)
+      yield Pipeline.ScoredEdge(a, b, Classification.Duplicate, 1.0, "test")).toDS()
+    val assign0 = Pipeline.cluster(feats, scored)
+    assert(assign0.collect().map(_.getString(1)).toSet == Set("\uFF61"))
+    val got = Pipeline.refine(assign0, feats, scored, cfg).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == ids.map(_ -> "\uFF61").toMap)
   }
 
   test("fusion: every cluster yields one canonical; caption from members; singletons pass through") {
