@@ -248,16 +248,19 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine FROM r WHERE ran
     * same trained parameters with independent SQL (the mm_* side-table
     * pattern). Training quality itself is gated separately by the OpsSpec
     * recall/lift tests; THESE rows gate that the distributed search over
-    * trained parameters is exact. Tables are rewritten on every (re)train,
-    * never reused across corpora.
+    * trained parameters is exact. Tables are rewritten on every (re)train.
+    *
+    * The side-table paths are keyed by a digest of the input dir's
+    * absolute path, and so are the two oracle strings that read them
+    * ([[oracles]]`(dir)`): training on another corpus (a test suite, a
+    * second Verify) writes other tables, so a dump and its oracle stay
+    * consistent however runs on different corpora interleave.
     */
-  // Fixed paths because the oracle SQL strings are static: LAST-WRITER-WINS
-  // across corpora — a Verify run retrains and rewrites them for ITS input
-  // dir at query time, so oracle-vs-dump comparison is consistent within a
-  // run (the driver's shape), but a dump from an OLDER run on a different
-  // corpus will no longer match oracles executed after a newer run.
-  val annIvfCentsPath = "/tmp/graft_ann_ivf_cents_v1"
-  val annPqCbPath = "/tmp/graft_ann_pq_cb_v1"
+  private def dirDigest(dir: String): String =
+    java.lang.Long.toHexString(Signatures.hash60(
+      java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString))
+  def annIvfCentsPath(dir: String): String = s"/tmp/graft_ann_ivf_cents_v1_${dirDigest(dir)}"
+  def annPqCbPath(dir: String): String = s"/tmp/graft_ann_pq_cb_v1_${dirDigest(dir)}"
 
   private val trainedCache = scala.collection.mutable.HashMap.empty[(String, String), AnyRef]
 
@@ -270,7 +273,7 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine FROM r WHERE ran
         cents.zipWithIndex
           .map { case (cent, i) => (i + 1, cent.toSeq, cent.map(x => x * x).sum / 2) }
           .toSeq.toDF("c", "cent", "halfnorm")
-          .coalesce(1).write.mode("overwrite").parquet(annIvfCentsPath)
+          .coalesce(1).write.mode("overwrite").parquet(annIvfCentsPath(dir))
         cents
       }).asInstanceOf[Array[Array[Double]]]
     }
@@ -284,7 +287,7 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine FROM r WHERE ran
           j <- cb.indices; c <- cb(j).indices
         } yield (j, c, cb(j)(c).toSeq)
         rows.toDF("j", "c", "cent")
-          .coalesce(1).write.mode("overwrite").parquet(annPqCbPath)
+          .coalesce(1).write.mode("overwrite").parquet(annPqCbPath(dir))
         cb
       }).asInstanceOf[Array[Array[Array[Double]]]]
     }
@@ -295,11 +298,11 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine FROM r WHERE ran
       centroids = Some(trainedIvf(spark, dir)))
   }
 
-  private val annIvfTrainedSql = {
+  private def annIvfTrainedSql(dir: String): String = {
     val cos = "list_dot_product(p.qv, n.nv) / " +
       "(sqrt(list_dot_product(p.qv, p.qv)) * sqrt(list_dot_product(n.nv, n.nv)))"
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM ${OracleGen.embSrc}),
-ct AS (SELECT c, cent, halfnorm FROM read_parquet('$annIvfCentsPath/*.parquet')),
+ct AS (SELECT c, cent, halfnorm FROM read_parquet('${annIvfCentsPath(dir)}/*.parquet')),
 scored AS (
   SELECT e.vec_id, e.v, ct.c, list_dot_product(e.v, ct.cent) - ct.halfnorm AS s
   FROM e CROSS JOIN ct),
@@ -325,13 +328,13 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine FROM r WHERE ran
       annK, trainedPq(spark, dir), pqShortlist)
   }
 
-  private val annPqTrainedSql = {
+  private def annPqTrainedSql(dir: String): String = {
     val subDim = 64 / pqM
     val diff = s"list_transform(generate_series(1, $subDim), i -> " +
       s"n.nv[b.j*$subDim + i] - b.cent[i])"
     val ones = s"list_transform(generate_series(1, $pqM), x -> 1.0)"
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM ${OracleGen.embSrc}),
-cb AS (SELECT j, c, cent FROM read_parquet('$annPqCbPath/*.parquet')),
+cb AS (SELECT j, c, cent FROM read_parquet('${annPqCbPath(dir)}/*.parquet')),
 nrm AS (
   SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv
   FROM e),
@@ -2283,12 +2286,17 @@ JOIN fmtr f ON f.exp_cluster = cl.exp_cluster AND f.rn = 1"""
     "mm_audio_dupes" -> (mmAudioDupes _),
     "pipeline_canonical" -> (pipelineCanonical _))
 
-  lazy val oracles: Map[String, String] = Map(
+  /** Oracle SQL for the rows above over the tables at `dir` (the trained
+    * ANN rows read that dir's side tables).
+    */
+  def oracles(dir: String): Map[String, String] = staticOracles ++ Map(
+    "ann_ivf" -> annIvfTrainedSql(dir),
+    "ann_pq" -> annPqTrainedSql(dir))
+
+  private lazy val staticOracles: Map[String, String] = Map(
     "ann_topk" -> annTopKSql,
     "ann_sq" -> annSqSql,
     "ann_lsh" -> annLshSql,
-    "ann_ivf" -> annIvfTrainedSql,
-    "ann_pq" -> annPqTrainedSql,
     "ann_ivfpq" -> annIvfPqSql,
     "ann_ivf_fixed" -> annIvfSql,
     "ann_pq_fixed" -> annPqSql,

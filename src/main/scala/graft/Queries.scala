@@ -721,7 +721,7 @@ WHERE CAST(i.c AS DOUBLE) / least(c1.n, c2.n) >= $containmentT"""
   /** Content-defined-chunking dedup — the storage-side dedup a 100 TB
     * corpus store runs below the semantic layer: chunk every document at
     * content-defined boundaries (positional rolling-hash rule, native
-    * [[graft.functions.CdcChunks]] kernel — boundaries survive edits
+    * [[graft.functions.SigExprs.cdcChunks]] kernel — boundaries survive edits
     * elsewhere in the doc, unlike fixed-width chunking), then keep only
     * the globally-first instance of each chunk (first = min (doc_id, idx),
     * an argmin AGGREGATE per chunk hash — never a window, so a
@@ -1023,7 +1023,10 @@ WHERE s.c >= $winnowShareMin
     "q1_agg" -> (q1Agg _),
     "q2_join" -> (q2Join _))
 
-  lazy val oracles: Map[String, String] = ExtQueries.oracles ++ Map(
+  /** Oracle SQL of every catalog row over the tables at `dir`. */
+  def oracles(dir: String): Map[String, String] = ExtQueries.oracles(dir) ++ coreOracles
+
+  private lazy val coreOracles: Map[String, String] = Map(
     "dd_exact" -> ddExactSql,
     "dd_ngram_jaccard" -> ddNgramJaccardSql,
     "dd_minhash_lsh" -> ddMinhashLshSql,

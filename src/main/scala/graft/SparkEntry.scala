@@ -34,7 +34,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the same parquet tables at `dir`. Omitted for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] = Queries.oracles
+  def oracleSql(dir: String): Map[String, String] = Queries.oracles(dir)
 }

@@ -8,7 +8,7 @@ import graft.block.Blocking
 import graft.classify.Classifier
 import graft.cluster.{ConnectedComponents, Refine}
 import graft.fuse.Fusion
-import graft.model.{Classification, DedupConfig, ImageRecord}
+import graft.model.{Classification, DedupConfig, IdOrdering, ImageRecord}
 import graft.sig.Signatures
 import graft.similarity.{ScalarSims, Sims}
 
@@ -183,7 +183,9 @@ object Pipeline {
 
   /** Stage 6: conflict-resolution fusion — one canonical record per cluster
     * via the Merge DSL in mapGroups; singletons pass through
-    * (ref `ConflictResolutionFusion.java:77-79`).
+    * (ref `ConflictResolutionFusion.java:77-79`). Members are sorted and the
+    * canonical id picked under [[IdOrdering]], so the canonical record of
+    * an unsplit cluster carries its `cluster_id`.
     */
   def fuse(images: DataFrame, assign: DataFrame): Dataset[Canonical] = {
     val spark = images.sparkSession
@@ -192,7 +194,7 @@ object Pipeline {
 
     val merge = Merge[FuseRec](Seq(
       FieldMerge[FuseRec, String]("image_id", _.image_id, (r, v) => r.copy(image_id = v),
-        andThen(min[String], first)),
+        andThen(min(IdOrdering.string), first)),
       FieldMerge[FuseRec, String]("caption", _.caption, (r, v) => r.copy(caption = v),
         andThen(longest, andThen(mostFrequent[String], first))),
       FieldMerge[FuseRec, String]("fmt", _.fmt, (r, v) => r.copy(fmt = v),
@@ -206,7 +208,7 @@ object Pipeline {
       .map { case (rec, a) => (a.getString(1), rec) }
       .groupByKey(_._1)
       .mapGroups { (cid, it) =>
-        val mem = it.map(_._2).toArray.sortBy(_.image_id)
+        val mem = it.map(_._2).toArray.sortBy(_.image_id)(IdOrdering.string)
         val annotated = mem.map(r => Annotated(r, "src", 1.0, 0L)).toSeq
         val (fusedRec, errors) = merge.fuse(annotated)
         Canonical(cid, mem.length.toLong, fusedRec.image_id, fusedRec.caption,

@@ -291,7 +291,7 @@ object Blocking {
       .limit(maxCollectedKeys + 1).collect()
     val candIds = if (probeKeyRows.length <= maxCollectedKeys) {
       val probeKeys: Array[Long] = probeKeyRows.map(_.getLong(0)).sorted
-      val matchedKeys = graft.functions.GraftColumnBridgeOps.keysInSortedSet(
+      val matchedKeys = graft.functions.KeysInSortedSet(
         Signatures.hashedShinglesCol(col(normCol), k), probeKeys)
       val index = records.select(col(idCol).as("iid"),
         explode(matchedKeys).as("key"))

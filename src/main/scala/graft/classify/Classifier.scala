@@ -52,9 +52,6 @@ object Classifier {
   def possibleRule(name: String, sim: Column): Column =
     when(sim > 0, result(PossibleDuplicate, sim, name))
 
-  /** Precondition wrapper (:280-285): predicate false => does not apply. */
-  def conditionalRule(pred: Column, rule: Column): Column = when(pred, rule)
-
   /** Ordered cascade: first applicable rule wins; none => UNKNOWN with
     * confidence null (UNKNOWN carries no weight, `Classification.java:54-64`).
     */

@@ -4,13 +4,10 @@ import scala.collection.mutable
 import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions.{col, when}
-import org.apache.spark.sql.types.DataType
 import org.apache.spark.util.LongAccumulator
 
-import graft.model.Classification
+import graft.model.{Classification, IdOrdering}
 import graft.sig.Signatures
 
 /** Precision refinement of transitive-closure clusters — the port of the
@@ -64,8 +61,8 @@ object Refine {
     * (members, known edges) — clusters are only split, never merged
     * (SURVEY.md §7.1.5).
     *
-    * Per cluster: members are sorted by id under the id type's Spark
-    * ordering (UTF-8 byte order for strings, the order CC's `min` uses) and
+    * Per cluster: members are sorted by id under [[IdOrdering]] (UTF-8
+    * byte order for strings, the order CC's `min` uses) and
     * indexed; known edges with both endpoints inside become [[WEdge]]s;
     * clusters of at most 2 or more than [[MaxRefine]] members pass through
     * with their CC id; the rest go to [[refineCluster]] with cutoff
@@ -104,7 +101,7 @@ object Refine {
       val all = mIt.toArray
       if (all.length <= 2 || all.length > MaxRefine) all.iterator.map(m => (m._2, cid))
       else {
-        val mem = all.sortBy(_._2)(idOrdering(idType))
+        val mem = all.sortBy(_._2)(IdOrdering.of(idType))
         val idx = mem.iterator.map(_._2).zipWithIndex.toMap
         val known = eIt.flatMap { e =>
           for (i <- idx.get(e._2); j <- idx.get(e._3)) yield WEdge.of(i, j, e._4)
@@ -120,12 +117,6 @@ object Refine {
         }
       }
     }(Encoders.tuple(kEnc, kEnc)).toDF("id", "cluster_id")
-  }
-
-  /** Spark's ordering of `idType` over its external (Scala) values. */
-  private def idOrdering[K](idType: DataType): Ordering[K] = {
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
-    Ordering.by[K, Any](toCatalyst)(PhysicalDataType.ordering(idType))
   }
 
   /** Partition quality (ref `scoreClustering`, :117-137): intra-pair weight

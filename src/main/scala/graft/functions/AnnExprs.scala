@@ -1,17 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
+
+import NativeKernel.{Doubles, Floats, Ints, Longs}
 
 /** Native Catalyst kernels for the ANN corpus-side hot path — the per-row
   * O(bits×dim) / O(cells×dim) map work that every vector pays at index
-  * build time. At the 10^12 target these two expressions ARE the ANN scan
-  * stage; the Scala-UDF versions they replace allocated a boxed
-  * Seq[Float] per row and broke the feature projection's codegen span
+  * build time, each called per row through a [[NativeKernel]] expression.
+  * At the 10^12 target these kernels ARE the ANN scan stage; the Scala-UDF
+  * versions they replace allocated a boxed Seq[Float] per row and broke
+  * the feature projection's codegen span
   * (the same defect class the round-2 verdict flagged for the text
   * signature kernels, fixed in SigExprs — this closes the ANN side).
   *
@@ -20,9 +21,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   */
 object AnnKernels {
 
-  /** Packed SRP sign bits: bit b set iff dot(planes(b), v) > 0, dims
-    * beyond min(v.length, dim) ignored (ref: Embeddings.lshBuckets UDF).
-    */
   /** Parquet array schemas usually carry containsNull=true even for
     * never-null data, so the type check cannot reject them; a null element
     * read as 0.0f would silently zero-poison signatures, so fail loudly
@@ -39,6 +37,9 @@ object AnnKernels {
     }
   }
 
+  /** Packed SRP sign bits: bit b set iff dot(planes(b), v) > 0, dims
+    * beyond min(v.length, dim) ignored (ref: Embeddings.lshBuckets UDF).
+    */
   def srpSig(v: ArrayData, planes: Array[Array[Double]], bits: Int, dim: Int): Long = {
     requireNoNulls(v)
     val n = v.numElements()
@@ -54,6 +55,10 @@ object AnnKernels {
     }
     out
   }
+
+  /** ‖c‖²/2 per centroid: the constant term of every IVF cell score. */
+  def halfNorms(cents: Array[Array[Double]]): Array[Double] =
+    cents.map(c => c.map(x => x * x).sum / 2)
 
   /** The query/corpus cell assignment of the IVF quantizer: top `nprobe`
     * cells by (v·c − ||c||²/2) descending, ties to the lower cell index —
@@ -155,33 +160,6 @@ object AnnKernels {
   * parity (identical planes to [[graft.ops.Embeddings.srpPlanes]], which
   * the ann_lsh oracle emits as SQL literals).
   */
-case class SrpSignature(child: Expression, bits: Int, dim: Int, seed: Long)
-    extends UnaryExpression {
-
-  @transient private lazy val planes: Array[Array[Double]] =
-    SrpSignature.planes(bits, dim, seed)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"srp_signature requires array<float>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    AnnKernels.srpSig(input.asInstanceOf[ArrayData], planes, bits, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("srpPlanes", planes, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AnnKernels.srpSig($c, $pRef, $bits, $dim)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SrpSignature {
   /** Single source of truth for the ±1 plane derivation (shared with
     * Embeddings.srpPlanes and the oracle literal emitter).
@@ -190,10 +168,9 @@ object SrpSignature {
     Array.tabulate(bits, dim)((b, d) =>
       if ((graft.sig.Signatures.hash60(s"srp:$seed:$b:$d") & 1L) == 1L) 1.0 else -1.0)
 
-  import org.apache.spark.sql.GraftColumnBridge
   def apply(c: Column, bits: Int, dim: Int, seed: Long): Column =
-    GraftColumnBridge.column(SrpSignature(
-      GraftColumnBridge.expression(c), bits, dim, seed))
+    NativeKernel.call("SrpSignature", AnnKernels, "srpSig", LongType, c -> Floats)(
+      planes(bits, dim, seed), bits, dim)
 }
 
 /** Top-nprobe IVF cell indices for an array<float> embedding, given the
@@ -202,77 +179,19 @@ object SrpSignature {
   * Note: `cents` compares by reference in expression equality — reuse one
   * instance per plan (both call sites construct the model once).
   */
-case class IvfCells(child: Expression, cents: Array[Array[Double]], nprobe: Int)
-    extends UnaryExpression {
-
-  @transient private lazy val halfNorms: Array[Double] =
-    cents.map(c => c.map(x => x * x).sum / 2)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ivf_cells requires array<float>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    AnnKernels.ivfCells(input.asInstanceOf[ArrayData], cents, halfNorms, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ivfCents", cents, "double[][]")
-    val hRef = ctx.addReferenceObj("ivfHalfNorms", halfNorms, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AnnKernels.ivfCells($c, $cRef, $hRef, $nprobe)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object IvfCells {
-  import org.apache.spark.sql.GraftColumnBridge
   def apply(c: Column, cents: Array[Array[Double]], nprobe: Int): Column =
-    GraftColumnBridge.column(IvfCells(
-      GraftColumnBridge.expression(c), cents, nprobe))
+    NativeKernel.call("IvfCells", AnnKernels, "ivfCells", Ints, c -> Floats)(
+      cents, AnnKernels.halfNorms(cents), nprobe)
 }
 
 /** Maximum IVF assignment score of an array<float> embedding — see
   * [[AnnKernels.ivfBestScore]].
   */
-case class IvfBestScore(child: Expression, cents: Array[Array[Double]])
-    extends UnaryExpression {
-
-  @transient private lazy val halfNorms: Array[Double] =
-    cents.map(c => c.map(x => x * x).sum / 2)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ivf_best_score requires array<float>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-
-  override protected def nullSafeEval(input: Any): Any =
-    AnnKernels.ivfBestScore(input.asInstanceOf[ArrayData], cents, halfNorms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ivfCents", cents, "double[][]")
-    val hRef = ctx.addReferenceObj("ivfHalfNorms", halfNorms, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AnnKernels.ivfBestScore($c, $cRef, $hRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object IvfBestScore {
-  import org.apache.spark.sql.GraftColumnBridge
   def apply(c: Column, cents: Array[Array[Double]]): Column =
-    GraftColumnBridge.column(IvfBestScore(
-      GraftColumnBridge.expression(c), cents))
+    NativeKernel.call("IvfBestScore", AnnKernels, "ivfBestScore", DoubleType, c -> Floats)(
+      cents, AnnKernels.halfNorms(cents))
 }
 
 /** Native PQ kernels: the per-row O(m·codes·subDim) nearest-codebook-entry
@@ -354,75 +273,26 @@ object PqKernels {
   }
 }
 
-/** PQ codes of a normalized array<double> column. `cb` compares by
+/** PQ codes of a NORMALIZED array<double> column: per subspace, the
+  * 0-based index of the L2-nearest codebook entry (first-min ties, same as
+  * the oracle's `list_position(d, list_min(d))`). This map IS the index
+  * build: nothing shuffled, and the emitted index row is m ints instead of
+  * dim floats (64-dim float → 8-byte codes is 32×). `cb` compares by
   * reference in expression equality — construct the codebook once per
   * plan (both call sites already do).
   */
-case class PqEncode(child: Expression, cb: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_encode requires array<double>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    PqKernels.encode(input.asInstanceOf[ArrayData], cb)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqCodebooks", cb, "double[][][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.PqKernels.encode($c, $cbRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object PqEncode {
-  import org.apache.spark.sql.GraftColumnBridge
   def apply(c: Column, cb: Array[Array[Array[Double]]]): Column =
-    GraftColumnBridge.column(PqEncode(GraftColumnBridge.expression(c), cb))
+    NativeKernel.call("PqEncode", PqKernels, "encode", Ints, c -> Doubles)(cb)
 }
 
-/** ADC distance between a normalized array<double> query column and an
-  * array<int> codes column.
+/** Asymmetric distance Σ_j ‖q̂_j − C_j[code_j]‖² between a normalized
+  * array<double> query column and an array<int> codes column, with the
+  * same sequential fold the oracle's dot-with-ones reproduces.
   */
-case class PqAdcDist(left: Expression, right: Expression,
-    cb: Array[Array[Array[Double]]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(org.apache.spark.sql.types.DoubleType, _),
-          ArrayType(IntegerType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"pq_adc requires (array<double>, array<int>), got " +
-        s"${l.simpleString}, ${r.simpleString}")
-  }
-
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    PqKernels.adc(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], cb)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqCodebooks", cb, "double[][][]")
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.PqKernels.adc($a, $b, $cbRef)")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object PqAdcDist {
-  import org.apache.spark.sql.GraftColumnBridge
   def apply(a: Column, b: Column, cb: Array[Array[Array[Double]]]): Column =
-    GraftColumnBridge.column(PqAdcDist(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b), cb))
+    NativeKernel.call("PqAdcDist", PqKernels, "adc", DoubleType, a -> Doubles, b -> Ints)(cb)
 }
 
 /** v̂ = v/‖v‖ of an array<float> column as an array<double> — one codegen'd
@@ -432,33 +302,12 @@ object PqAdcDist {
   * of the PQ/SQ corpus encode at n=1M). Arithmetic is identical: the norm
   * is the same ascending float-product double fold as FloatDotProduct,
   * each element is f.toDouble / norm (0-norm → ±Infinity/NaN, exactly the
-  * builtin division), so every embedding-family oracle hash is unchanged.
+  * builtin division), so every embedding-family oracle hash is unchanged
+  * (the oracle computes `sqrt(list_dot_product(v, v))`).
   */
-case class NormalizeFloats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"normalize_floats requires array<float>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.DoubleType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    AnnKernels.normalizeFloats(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.AnnKernels.normalizeFloats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NormalizeFloats {
-  import org.apache.spark.sql.GraftColumnBridge
   def apply(c: Column): Column =
-    GraftColumnBridge.column(NormalizeFloats(GraftColumnBridge.expression(c)))
+    NativeKernel.call("NormalizeFloats", AnnKernels, "normalizeFloats", Doubles, c -> Floats)()
 }
 
 /** SQ8 codes of a normalized array<double> column: per dim
@@ -466,34 +315,9 @@ object NormalizeFloats {
   * native form of the builtin-HOF transform (identical arithmetic incl.
   * NaN → floor → 0 coercion), one codegen'd pass instead of an
   * interpreted per-element lambda with two element_at literal lookups.
+  * 8-bit integer codes: a 4× cut vs float32 corpus rows, and unlike PQ the
+  * reconstruction is per-dim, so recall degrades gracefully.
   */
-case class SqEncode(child: Expression, mins: Array[Double], maxs: Array[Double])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"sq_encode requires array<double>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SqEncode.encode(input.asInstanceOf[ArrayData], mins, maxs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mnRef = ctx.addReferenceObj("sqMins", mins, "double[]")
-    val mxRef = ctx.addReferenceObj("sqMaxs", maxs, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SqEncode.encode($c, $mnRef, $mxRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SqEncode {
   def encode(v: ArrayData, mins: Array[Double], maxs: Array[Double]): ArrayData = {
     val n = v.numElements()
@@ -511,8 +335,6 @@ object SqEncode {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  import org.apache.spark.sql.GraftColumnBridge
   def apply(c: Column, mins: Array[Double], maxs: Array[Double]): Column =
-    GraftColumnBridge.column(SqEncode(
-      GraftColumnBridge.expression(c), mins, maxs))
+    NativeKernel.call("SqEncode", this, "encode", Longs, c -> Doubles)(mins, maxs)
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.types.{BooleanType, LongType}
 
 /** Broadcast Bloom-filter membership over a double-hashed 60-bit key pair —
   * the standing-corpus dedup primitive (ref semantics: the "have we seen
@@ -23,31 +20,6 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   * (pos_i = (h1 + i*h2) mod m), which a SQL oracle reproduces with exact
   * integer arithmetic.
   */
-case class BloomContains(left: Expression, right: Expression,
-    bits: Array[Long], m: Int, k: Int) extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_contains requires (bigint, bigint), got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def dataType: DataType = BooleanType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Bloom.contains(bits, m, k, a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBits", bits, "long[]")
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.Bloom.contains($ref, $m, $k, $a, $b)")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object Bloom {
 
   /** PRECONDITION: 0 <= h1, h2 < 2^60 and k*h2 + h1 < 2^63 (60-bit md5
@@ -89,9 +61,13 @@ object Bloom {
       })
   }
 
-  def containsCol(h1: Column, h2: Column, bits: Array[Long], m: Int, k: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(BloomContains(
-      GraftColumnBridge.expression(h1), GraftColumnBridge.expression(h2), bits, m, k))
-  }
+  /** [[contains]] with the row values first — the argument order of a
+    * [[NativeKernel]] call.
+    */
+  def containsPair(h1: Long, h2: Long, bits: Array[Long], m: Int, k: Int): Boolean =
+    contains(bits, m, k, h1, h2)
+
+  def containsCol(h1: Column, h2: Column, bits: Array[Long], m: Int, k: Int): Column =
+    NativeKernel.call("BloomContains", this, "containsPair", BooleanType,
+      h1 -> LongType, h2 -> LongType)(bits, m, k)
 }

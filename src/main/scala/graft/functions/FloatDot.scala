@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
+
+import NativeKernel.{Floats, Longs}
 
 /** Dot product of two array<float> columns as one codegen'd multiply-add
   * scan over ArrayData — no intermediate zipped array, no boxing. The
@@ -15,34 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `list_dot_product` over `::DOUBLE[]`), so oracle hashes are unchanged.
   * Extra elements of the longer array are ignored (zip semantics).
   */
-case class FloatDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"float_dot requires two array<float> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    FloatDotProduct.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.FloatDotProduct.dot($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object FloatDotProduct {
-  /** JVM entry shared by eval and generated code: sequential double fold. */
   def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
@@ -54,10 +26,8 @@ object FloatDotProduct {
     acc
   }
 
-  import org.apache.spark.sql.GraftColumnBridge
   def apply(a: Column, b: Column): Column =
-    GraftColumnBridge.column(FloatDotProduct(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    NativeKernel.call("FloatDotProduct", this, "dot", DoubleType, a -> Floats, b -> Floats)()
 }
 
 /** Squared L2 distance of two array<bigint> code columns as one codegen'd
@@ -69,32 +39,6 @@ object FloatDotProduct {
   * the fold it replaces and the ann_sq oracle is unchanged. Extra
   * elements of the longer array are ignored (zip semantics).
   */
-case class LongSqL2(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(org.apache.spark.sql.types.LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"long_sq_l2 requires two array<bigint> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    LongSqL2.dist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.LongSqL2.dist($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object LongSqL2 {
   def dist(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
@@ -108,8 +52,6 @@ object LongSqL2 {
     acc
   }
 
-  import org.apache.spark.sql.GraftColumnBridge
   def apply(a: Column, b: Column): Column =
-    GraftColumnBridge.column(LongSqL2(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    NativeKernel.call("LongSqL2", this, "dist", LongType, a -> Longs, b -> Longs)()
 }

@@ -12,23 +12,24 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst forms of the signature kernels (MinHash, LSH band keys,
-  * SimHash, bit-block keys, hashed shingles).
+/** The signature kernels (MinHash, LSH band keys, SimHash, bit-block keys,
+  * hashed shingles, winnowing, CDC chunks) as static JVM methods, each
+  * called once per row through a [[NativeKernel]] expression.
   *
   * These replace the Scala UDFs that used to implement the feature stage of
   * the dedup pipeline (boxed `Seq[String]`/`Seq[Long]` per row — the largest
   * allocation source in the hottest path; BASELINE.md names GC rate as the
-  * main non-scaling residue). Each expression is one static JVM call per row
-  * operating directly on `ArrayData`/`UTF8String` buffers: no boxing, no
-  * Seq wrappers, and the projection stays inside whole-stage codegen.
+  * main non-scaling residue). Each kernel operates directly on
+  * `ArrayData`/`UTF8String` buffers: no boxing, no Seq wrappers, and the
+  * projection stays inside whole-stage codegen.
   *
   * Semantics are IDENTICAL to the Scala kernels in [[graft.sig.Signatures]]
   * (unit-tested for equality), so every oracle hash and the pipeline recall
   * are unchanged.
   *
-  * PRECONDITION shared by the byte-window kernels ([[HashedShingles]],
-  * [[SimHashWords]]): the input string is output of
-  * [[graft.functions.NormalizeText]] (pure ASCII `[a-z0-9 ]`), so byte
+  * PRECONDITION shared by the byte-window kernels ([[hashedShingles]],
+  * [[simHashWords]]): the input string is output of
+  * [[graft.sig.Signatures.normalizeCol]] (pure ASCII `[a-z0-9 ]`), so byte
   * offsets equal char offsets. That is the only form the pipeline feeds.
   */
 object SigKernels {
@@ -460,306 +461,6 @@ object SigKernels {
   }
 }
 
-/** MinHash signature from an array<bigint> of pre-hashed shingles. */
-case class MinHashFromHashes(child: Expression, a: Array[Long], b: Array[Long])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash requires array<bigint>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.minHashFromHashes(input.asInstanceOf[ArrayData], a, b)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("mhA", a, "long[]")
-    val bRef = ctx.addReferenceObj("mhB", b, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.minHashFromHashes($c, $aRef, $bRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** String LSH band keys ("band:v1,v2,...") of a MinHash signature. */
-case class BandKeyStrings(child: Expression, bands: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"band_keys requires array<bigint>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.bandKeyStrings(input.asInstanceOf[ArrayData], bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.bandKeyStrings($c, $bands)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Hashed (64-bit, 58-bit-masked) LSH band keys — the pipeline's compact
-  * long-keyed blocking index (8 bytes/key shuffled instead of a ~30-char
-  * string).
-  */
-case class BandHashKeys(child: Expression, bands: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"band_hash_keys requires array<bigint>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.bandHashKeys(input.asInstanceOf[ArrayData], bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.bandHashKeys($c, $bands)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Pigeonhole bit-block keys ("i:v" strings) of a 64-bit hash column. */
-case class BitBlockKeyStrings(child: Expression, blocks: Int, totalBits: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bit_block_keys requires bigint, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.bitBlockKeyStrings(input.asInstanceOf[Long], blocks, totalBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.bitBlockKeyStrings($c, $blocks, $totalBits)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Sorted distinct xxhash64 values of all char-k shingles of a normalized
-  * (ASCII) string — one call replacing the
-  * sequence->transform(substring)->xxhash64->array_distinct->array_sort
-  * expression chain and all its intermediate arrays.
-  */
-case class HashedShingles(child: Expression, k: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hashed_shingles requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.hashedShingles(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.hashedShingles($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** 32-bit sibling of [[HashedShingles]] (sorted distinct
-  * `xxhash64(shingle).toInt`): the flagship pipeline's shingle feature —
-  * HALF the verify-shuffle bytes of the 64-bit form at the same Jaccard
-  * semantics (see SigKernels.hashedShingles32).
-  */
-case class HashedShingles32(child: Expression, k: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hashed_shingles32 requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.hashedShingles32(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.hashedShingles32($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** MinHash signature over a sorted-distinct INT shingle array — the
-  * 32-bit-feature twin of [[MinHashFromHashes]].
-  */
-case class MinHashFromIntHashes(child: Expression, a: Array[Long], b: Array[Long])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig32 requires array<int>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.minHashFromIntHashes(input.asInstanceOf[ArrayData], a, b)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("mhA", a, "long[]")
-    val bRef = ctx.addReferenceObj("mhB", b, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.minHashFromIntHashes($c, $aRef, $bRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Sorted distinct hash60 values of all char-k shingles of a normalized
-  * (ASCII) string — the oracle-mirrorable (md5-based) sibling of
-  * [[HashedShingles]].
-  */
-case class Hash60Shingles(child: Expression, k: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hash60_shingles requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.hash60Shingles(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.hash60Shingles($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SimHash over the space-separated tokens of a normalized (ASCII) string.
-  * fast=true hashes tokens with xxhash64 (pipeline); fast=false with the
-  * md5-based hash60 (oracle-mirrored catalog queries).
-  */
-case class SimHashWords(child: Expression, bits: Int, fast: Boolean)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash_words requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.simHashWords(input.asInstanceOf[UTF8String], bits, fast)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.simHashWords($c, $bits, $fast)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Column-level constructors. */
-/** Content-defined chunks (array<string>) of a normalized ASCII string —
-  * see [[SigKernels.cdcChunks]] for the positional boundary rule.
-  */
-case class CdcChunks(child: Expression, k: Int, mod: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"cdc_chunks requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.cdcChunks(input.asInstanceOf[UTF8String], k, mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.cdcChunks($c, $k, $mod)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Winnowing fingerprint keys (sorted distinct array<bigint>) — see
-  * [[SigKernels.winnowKeys]] for the selection rule and key packing.
-  */
-case class WinnowKeys(child: Expression, k: Int, w: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"winnow_keys requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.winnowKeys(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.winnowKeys($c, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Distinct winnowing fingerprint hashes per document — codegen'd; see
-  * [[SigKernels.winnowFphs]].
-  */
-case class WinnowFphs(child: Expression, k: Int, w: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"winnow_fphs requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.winnowFphs(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SigKernels.winnowFphs($c, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Within-bucket pair expansion for blocking: a generator emitting
   * (id1, id2) rows from an array<bigint> or array<string> bucket — see
   * [[SigKernels.bucketPairs]]. Codegen'd: whole-stage codegen iterates the
@@ -801,58 +502,38 @@ case class BucketPairs(child: Expression) extends UnaryExpression with Generator
     copy(child = newChild)
 }
 
-/** Comma-joined decimal string of an array<bigint> — codegen'd digest
-  * preimage; see [[SigKernels.joinLongsCsv]].
+/** Column constructors of the string-level kernels that have no
+  * [[graft.sig.Signatures]] column form (the feature kernels' constructors
+  * are the `Signatures.*Col` defs).
   */
-case class JoinLongsCsv(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"join_longs_csv requires array<bigint>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(input: Any): Any =
-    SigKernels.joinLongsCsv(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SigKernels.joinLongsCsv($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SigExprs {
+  import NativeKernel.{Longs, Strings}
   import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 
-  def minHashFromHashes(c: Column, a: Array[Long], b: Array[Long]): Column =
-    column(MinHashFromHashes(expression(c), a, b))
-  def bandKeyStrings(c: Column, bands: Int): Column =
-    column(BandKeyStrings(expression(c), bands))
-  def bandHashKeys(c: Column, bands: Int): Column =
-    column(BandHashKeys(expression(c), bands))
-  def bitBlockKeyStrings(c: Column, blocks: Int, totalBits: Int): Column =
-    column(BitBlockKeyStrings(expression(c), blocks, totalBits))
-  def hashedShingles(c: Column, k: Int): Column =
-    column(HashedShingles(expression(c), k))
-  def hashedShingles32(c: Column, k: Int): Column =
-    column(HashedShingles32(expression(c), k))
-  def minHashFromIntHashes(c: Column, a: Array[Long], b: Array[Long]): Column =
-    column(MinHashFromIntHashes(expression(c), a, b))
-  def hash60Shingles(c: Column, k: Int): Column =
-    column(Hash60Shingles(expression(c), k))
-  def simHashWords(c: Column, bits: Int, fast: Boolean): Column =
-    column(SimHashWords(expression(c), bits, fast))
+  /** Content-defined chunks (array<string>) of a normalized ASCII string —
+    * see [[SigKernels.cdcChunks]] for the positional boundary rule.
+    */
   def cdcChunks(c: Column, k: Int, mod: Int): Column =
-    column(CdcChunks(expression(c), k, mod))
+    NativeKernel.call("CdcChunks", SigKernels, "cdcChunks", Strings, c -> StringType)(k, mod)
+
+  /** Winnowing fingerprint keys (sorted distinct array<bigint>) — see
+    * [[SigKernels.winnowKeys]] for the selection rule and key packing.
+    */
   def winnowKeys(c: Column, k: Int, w: Int): Column =
-    column(WinnowKeys(expression(c), k, w))
+    NativeKernel.call("WinnowKeys", SigKernels, "winnowKeys", Longs, c -> StringType)(k, w)
+
+  /** Distinct winnowing fingerprint hashes per document — see
+    * [[SigKernels.winnowFphs]].
+    */
   def winnowFphs(c: Column, k: Int, w: Int): Column =
-    column(WinnowFphs(expression(c), k, w))
+    NativeKernel.call("WinnowFphs", SigKernels, "winnowFphs", Longs, c -> StringType)(k, w)
+
+  /** Comma-joined decimal string of an array<bigint> — codegen'd digest
+    * preimage; see [[SigKernels.joinLongsCsv]].
+    */
   def joinLongsCsv(c: Column): Column =
-    column(JoinLongsCsv(expression(c)))
+    NativeKernel.call("JoinLongsCsv", SigKernels, "joinLongsCsv", StringType, c -> Longs)()
+
   def bucketPairs(c: Column): Column =
     column(BucketPairs(expression(c)))
 }

@@ -1,57 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{greatest, lit, size, when}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.functions.{lit, size, when}
+import org.apache.spark.sql.types.IntegerType
 
-/** Intersection cardinality of two SORTED long arrays — a native Catalyst
-  * expression (preference order (b) of the build rules: custom Expression
-  * before UDF). `array_intersect` builds a hash set per row and materializes
-  * the intersection array; for the verify hot path we only need |∩| of two
-  * pre-sorted hash shingle arrays, which a merge scan computes in O(n+m)
-  * reading primitive longs straight out of ArrayData — no boxing, no
-  * allocation. PRECONDITION: both arrays sorted ascending, distinct —
-  * unsorted input undercounts (documented in the SQL usage string).
-  *
-  * Type checking makes SQL misuse an AnalysisException instead of silent
-  * garbage (array<int> elements read as longs).
+import NativeKernel.{Ints, Longs}
+
+/** Intersection cardinality of two SORTED long arrays (merge scan). Kernel
+  * of [[SortedIntersect.card]]: `array_intersect` builds a hash set per row
+  * and materializes the intersection array; for the verify hot path we
+  * only need |∩| of two pre-sorted hash shingle arrays, which a merge scan
+  * computes in O(n+m) reading primitive longs straight out of ArrayData —
+  * no boxing, no allocation. PRECONDITION: both arrays sorted ascending,
+  * distinct — unsorted input undercounts (documented in the SQL usage
+  * string).
   */
-case class SortedLongIntersectCard(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sorted_intersect_card requires two array<bigint> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedLongIntersectCard.card(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  // real codegen (not CodegenFallback): one static call, keeps the verify
-  // projection inside its whole-stage codegen span
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.SortedLongIntersectCard.card($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object SortedLongIntersectCard {
-  /** JVM entry shared by eval and generated code. */
   def card(x: ArrayData, y: ArrayData): Int = {
     var i = 0; var j = 0; var c = 0
     val n = x.numElements(); val m = y.numElements()
@@ -68,33 +33,6 @@ object SortedLongIntersectCard {
 /** Int sibling of [[SortedLongIntersectCard]] for the 32-bit pipeline
   * shingle feature (array<int>, sorted ascending, distinct).
   */
-case class SortedIntIntersectCard(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(IntegerType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sorted_intersect_card_int requires two array<int> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntIntersectCard.card(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.SortedIntIntersectCard.card($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object SortedIntIntersectCard {
   def card(x: ArrayData, y: ArrayData): Int = {
     var i = 0; var j = 0; var c = 0
@@ -116,30 +54,6 @@ object SortedIntIntersectCard {
   * join, each document emits ONLY its matching probe keys (typically a
   * handful), and the join machinery never sees the non-matches.
   */
-case class KeysInSortedSet(child: Expression, keys: Array[Long])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"keys_in_sorted_set requires array<bigint>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    KeysInSortedSet.matches(input.asInstanceOf[ArrayData], keys)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sortedKeys", keys, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.KeysInSortedSet.matches($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object KeysInSortedSet {
   /** PRECONDITION: x sorted ascending distinct; keys sorted ascending. */
   def matches(x: ArrayData, keys: Array[Long]): ArrayData = {
@@ -155,26 +69,24 @@ object KeysInSortedSet {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
       if (c == out.length) out else java.util.Arrays.copyOf(out, c))
   }
-}
 
-/** Column constructors for expressions carrying driver-side arrays. */
-object GraftColumnBridgeOps {
-  import org.apache.spark.sql.GraftColumnBridge
-  def keysInSortedSet(c: Column, keys: Array[Long]): Column =
-    GraftColumnBridge.column(KeysInSortedSet(GraftColumnBridge.expression(c), keys))
+  def apply(c: Column, keys: Array[Long]): Column =
+    NativeKernel.call("KeysInSortedSet", this, "matches", Longs, c -> Longs)(keys)
 }
 
 object SortedIntersect {
 
-  import org.apache.spark.sql.GraftColumnBridge
-
+  /** |a ∩ b| of two sorted distinct array<bigint> columns; a wrong element
+    * type fails analysis (array<int> elements read as longs would be
+    * silent garbage).
+    */
   def card(a: Column, b: Column): Column =
-    GraftColumnBridge.column(SortedLongIntersectCard(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    NativeKernel.call("SortedLongIntersectCard", SortedLongIntersectCard, "card", IntegerType,
+      a -> Longs, b -> Longs)()
 
   def cardInt(a: Column, b: Column): Column =
-    GraftColumnBridge.column(SortedIntIntersectCard(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    NativeKernel.call("SortedIntIntersectCard", SortedIntIntersectCard, "card", IntegerType,
+      a -> Ints, b -> Ints)()
 
   /** Jaccard over two sorted distinct int arrays (32-bit shingle form). */
   def jaccardSortedInt(a: Column, b: Column): Column = {

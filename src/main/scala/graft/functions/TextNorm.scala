@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text normalization kernel — the generalization of the reference's
@@ -52,30 +48,7 @@ object TextNorm {
     sb.toString
   }
 
-  /** JVM entry for generated code. */
+  /** Row kernel of [[graft.sig.Signatures.normalizeCol]]. */
   def normalizeUtf8(s: UTF8String): UTF8String =
     if (s == null) null else UTF8String.fromString(normalize(s.toString))
-}
-
-/** Catalyst expression form of [[TextNorm.normalize]] — participates in
-  * whole-stage codegen (one static call per row; no regex programs).
-  */
-case class NormalizeText(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextNorm.normalizeUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextNorm.normalizeUtf8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object NormalizeText {
-  import org.apache.spark.sql.GraftColumnBridge
-  def apply(c: Column): Column =
-    GraftColumnBridge.column(NormalizeText(GraftColumnBridge.expression(c)))
 }

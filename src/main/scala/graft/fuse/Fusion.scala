@@ -142,14 +142,6 @@ object Fusion {
 
   def transform[T](f: T => T): Resolution[T] = vs => vs.map(a => a.copy(value = f(a.value)))
 
-  /** Deterministic "random" pick, seeded by the values (the reference's
-    * `random` uses an unseeded RNG, :143-151 — SURVEY.md §7.5 risk 5).
-    */
-  def randomPick[T]: Resolution[T] = vs =>
-    if (vs.isEmpty) vs
-    // floorMod, not .abs: abs(Int.MinValue) is negative and would throw
-    else Seq(vs(java.lang.Math.floorMod(vs.map(_.value.hashCode).sum, vs.size)))
-
   def andThen[T](a: Resolution[T], b: Resolution[T]): Resolution[T] = vs => b(a(vs))
 
   // ---------------------------------------------------- tagged resolutions

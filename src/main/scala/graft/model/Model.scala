@@ -1,5 +1,9 @@
 package graft.model
 
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.types.{DataType, StringType}
+
 /** Core data model for the dedup engine.
   *
   * Re-expresses the reference's generic record/candidate/cluster types
@@ -58,6 +62,25 @@ final case class ScoredPair(
   * unlike the reference's counter ids, `ClusterIdGenerators.java:36-59`).
   */
 final case class Assignment(id: String, cluster_id: String)
+
+/** The one order of record and cluster ids: Spark's interpreted ordering
+  * of the id type — numeric for bigint, UTF-8 byte order for string — the
+  * order Spark's `min`/`least` use, so connected components names a
+  * cluster by this order's minimum. Every Scala-side choice of a minimum
+  * or sorted id (refine, fusion, streaming clustering) uses it too:
+  * `java.lang.String`'s own order compares UTF-16 units and disagrees with
+  * UTF-8 above U+FFFF ("\uFF61" < "\uD83D\uDE00" in UTF-8, not in UTF-16).
+  */
+object IdOrdering {
+  /** Spark's ordering of `idType` over its external (Scala) values. */
+  def of[K](idType: DataType): Ordering[K] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    Ordering.by[K, Any](toCatalyst)(PhysicalDataType.ordering(idType))
+  }
+
+  /** UTF-8 byte order of string ids. */
+  val string: Ordering[String] = of[String](StringType)
+}
 
 /** An undirected weighted edge between records, used by clustering/refine.
   * Ref: `core/dedupe/matching/WeightedEdge.java:39-65`.

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{FloatDotProduct, IvfCells, NormalizeFloats, PqAdcDist, PqEncode, SqEncode}
 import graft.sig.Signatures
 
 /** Similarity search over an embedding column (Array[Float]) — the
@@ -15,18 +16,12 @@ import graft.sig.Signatures
   */
 object Embeddings {
 
-  /** dot(a, b): native codegen'd multiply-add scan (FloatDotProduct) —
-    * bit-identical to the previous aggregate(zip_with(...)) fold and to
-    * DuckDB's list_dot_product, without the per-pair intermediate array.
-    */
-  def dotCol(a: Column, b: Column): Column = graft.functions.FloatDotProduct(a, b)
-
   /** sqrt(v·v), hoisted ONCE per vector before pairing — the O(n) side of
     * the O(n²) cosine computation (norm value identical to computing it
     * per pair, so oracle hashes are unchanged).
     */
   private def withNorm(df: DataFrame, vCol: String, normName: String): DataFrame =
-    df.withColumn(normName, sqrt(dotCol(col(vCol), col(vCol))))
+    df.withColumn(normName, sqrt(FloatDotProduct(col(vCol), col(vCol))))
 
   /** Exact top-k neighbors by cosine for a set of query vectors.
     * Plan shape: broadcast the (small) query side, one shuffle for the
@@ -40,7 +35,7 @@ object Embeddings {
       "nv", "nn")
     val scored = v.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (dotCol(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("_s"))
+        (FloatDotProduct(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("_s"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("_s").desc, col("neighbor_id"))
     localTopK(scored, k, asc = false)
@@ -148,7 +143,7 @@ object Embeddings {
     val a = withNorm(vectors.select(col("vec_id").as("id1"), col("embedding").as("v1")), "v1", "n1")
     val b = withNorm(vectors.select(col("vec_id").as("id2"), col("embedding").as("v2")), "v2", "n2")
     a.join(b, col("id1") < col("id2"))
-      .withColumn("cosine", dotCol(col("v1"), col("v2")) / (col("n1") * col("n2")))
+      .withColumn("cosine", FloatDotProduct(col("v1"), col("v2")) / (col("n1") * col("n2")))
       .where(col("cosine") >= threshold)
       .select(col("id1"), col("id2"), col("cosine"))
   }
@@ -284,7 +279,7 @@ object Embeddings {
     * assignment is the O(n·cells·dim) map of every index build.
     */
   def ivfCellAssigner(cents: Array[Array[Double]], nprobe: Int): Column => Column =
-    v => graft.functions.IvfCells(v, cents, nprobe)
+    IvfCells(_, cents, nprobe)
 
   /** IVF top-k ANN: assign every vector to its nearest deterministic
     * centroid cell (one shuffle), probe each query's `nprobe` nearest
@@ -314,7 +309,7 @@ object Embeddings {
     val scored = cells.join(broadcast(probes), Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (dotCol(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("_s"))
+        (FloatDotProduct(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("_s"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("_s").desc, col("neighbor_id"))
     localTopK(scored, k, asc = false)
@@ -340,7 +335,7 @@ object Embeddings {
     val a = withNorm(vectors.select(col("vec_id").as("id1"), col("embedding").as("v1")), "v1", "n1")
     val b = withNorm(vectors.select(col("vec_id").as("id2"), col("embedding").as("v2")), "v2", "n2")
     cands.join(a, Seq("id1")).join(b, Seq("id2"))
-      .withColumn("cosine", dotCol(col("v1"), col("v2")) / (col("n1") * col("n2")))
+      .withColumn("cosine", FloatDotProduct(col("v1"), col("v2")) / (col("n1") * col("n2")))
       .where(col("cosine") >= threshold)
       .select(col("id1"), col("id2"), col("cosine"))
   }
@@ -369,7 +364,7 @@ object Embeddings {
     val b = asg.select(col("cell"), col("vec_id").as("id2"),
       col("embedding").as("v2"), col("n").as("n2"))
     a.join(b, Seq("cell")).where(col("id1") < col("id2"))
-      .withColumn("cosine", dotCol(col("v1"), col("v2")) / (col("n1") * col("n2")))
+      .withColumn("cosine", FloatDotProduct(col("v1"), col("v2")) / (col("n1") * col("n2")))
       .where(col("cosine") >= threshold)
       .select(col("id1"), col("id2"), col("cosine"))
       .distinct()
@@ -449,13 +444,6 @@ object Embeddings {
     * |projection|) break to the lower bit index.
     */
   // ------------------------------------------------- product quantization
-
-  /** v̂ = v/‖v‖ as a double array (native [[graft.functions.NormalizeFloats]]
-    * kernel). The norm is the same sequential-fold double the oracle
-    * computes (`sqrt(list_dot_product(v, v))`), so normalized elements are
-    * bit-exact across engines.
-    */
-  def normalizedCol(v: Column): Column = graft.functions.NormalizeFloats(v)
 
   /** Deterministic data-independent PQ codebooks (hash60-uniform entries),
     * the catalog/oracle configuration: like [[ivfCentroids]], no training
@@ -555,21 +543,6 @@ object Embeddings {
     }
   }
 
-  /** PQ codes of a NORMALIZED double-array column: per subspace, the
-    * 0-based index of the L2-nearest codebook entry (first-min ties, same
-    * as the oracle's `list_position(d, list_min(d))`). Native codegen
-    * kernel ([[graft.functions.PqEncode]]) with the exact fold arithmetic
-    * of the builtin-HOF tree it replaced — the HOF form ran interpreted
-    * at ~180 rows/s/core (measured by the ANN scale probe), which made
-    * the O(n·codes·dim) encode the bottleneck of the whole index build.
-    * This map IS the index build: nothing shuffled, and the emitted
-    * index row is m ints instead of dim floats — at the 10^12 target
-    * that is the difference between an index that fits executor memory
-    * and one that doesn't (64-dim float → 8-byte codes is 32×).
-    */
-  def pqCodesCol(nv: Column, cb: Array[Array[Array[Double]]]): Column =
-    graft.functions.PqEncode(nv, cb)
-
   /** PQ-ADC top-k with exact re-rank — the IVF-PQ search shape without the
     * coarse stage (compose with [[ivfTopK]]'s cells for both): score every
     * (query, code-row) pair by asymmetric distance Σ_j ‖q̂_j − C_j[code_j]‖²
@@ -585,17 +558,17 @@ object Embeddings {
     import org.apache.spark.sql.expressions.Window
     val coded = vectors
       .select(col("vec_id").as("neighbor_id"), col("embedding"))
-      .withColumn("_nv", normalizedCol(col("embedding")))
-      .withColumn("pq", pqCodesCol(col("_nv"), cb))
+      .withColumn("_nv", NormalizeFloats(col("embedding")))
+      .withColumn("pq", PqEncode(col("_nv"), cb))
       .select(col("neighbor_id"), col("pq"))
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding"))
-      .withColumn("qnv", normalizedCol(col("embedding")))
+      .withColumn("qnv", NormalizeFloats(col("embedding")))
       .select(col("query_id"), col("qnv"))
 
     val scored = coded.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        adcCol(col("qnv"), col("pq"), cb).as("_s"))
+        PqAdcDist(col("qnv"), col("pq"), cb).as("_s"))
     val short = localTopK(scored, shortlist, asc = true)
       .withColumn("_sr", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("_s"), col("neighbor_id"))))
@@ -604,15 +577,6 @@ object Embeddings {
 
     exactRerank(short, vectors, queries, k)
   }
-
-  /** Asymmetric distance Σ_j ‖q̂_j − C_j[code_j]‖² between a normalized
-    * query column and a codes column — native kernel
-    * ([[graft.functions.PqAdcDist]]) with the same sequential fold the
-    * oracle's dot-with-ones reproduces.
-    */
-  private def adcCol(qnv: Column, pq: Column,
-                     cb: Array[Array[Array[Double]]]): Column =
-    graft.functions.PqAdcDist(qnv, pq, cb)
 
   /** Exact float-cosine re-rank of a (query_id, neighbor_id) shortlist —
     * only the shortlist rows ever touch the wide embedding column again.
@@ -627,7 +591,7 @@ object Embeddings {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
     short.join(broadcast(qn), Seq("query_id")).join(vn, Seq("neighbor_id"))
-      .withColumn("cosine", dotCol(col("qv"), col("nv")) / (col("qn") * col("nn")))
+      .withColumn("cosine", FloatDotProduct(col("qv"), col("nv")) / (col("qn") * col("nn")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("int").as("rank"),
@@ -645,21 +609,11 @@ object Embeddings {
     */
   def sqDimStats(vectors: DataFrame): (Array[Double], Array[Double]) = {
     val el = vectors
-      .select(posexplode(normalizedCol(col("embedding"))).as(Seq("ord", "x")))
+      .select(posexplode(NormalizeFloats(col("embedding"))).as(Seq("ord", "x")))
       .groupBy("ord").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
       .orderBy("ord").collect()
     (el.map(_.getDouble(1)), el.map(_.getDouble(2)))
   }
-
-  /** SQ8 codes of a normalized vector column: per dim
-    * `least(255, floor((x − mn) · 255 / (mx − mn)))` (0 on a constant dim)
-    * — 8-bit integer codes, a 4× cut vs float32 corpus rows (and unlike PQ
-    * the reconstruction is per-dim, so recall degrades gracefully).
-    * Native codegen kernel ([[graft.functions.SqEncode]]) with the exact
-    * floor/least arithmetic of the builtin transform it replaced.
-    */
-  def sqCodesCol(nv: Column, mins: Array[Double], maxs: Array[Double]): Column =
-    graft.functions.SqEncode(nv, mins, maxs)
 
   /** SQ8 search: integer squared-L2 over code arrays shortlists, exact
     * float cosine re-ranks — same shape as [[pqRerankTopK]] but the
@@ -674,10 +628,10 @@ object Embeddings {
     val (mins, maxs) = sqDimStats(vectors)
     val coded = vectors
       .select(col("vec_id").as("neighbor_id"),
-        sqCodesCol(normalizedCol(col("embedding")), mins, maxs).as("sq"))
+        SqEncode(NormalizeFloats(col("embedding")), mins, maxs).as("sq"))
     val q = queries
       .select(col("vec_id").as("query_id"),
-        sqCodesCol(normalizedCol(col("embedding")), mins, maxs).as("qsq"))
+        SqEncode(NormalizeFloats(col("embedding")), mins, maxs).as("qsq"))
     // native integer-L2 kernel: this expression runs once per
     // (query, corpus-row) candidate — the O(n·q) stage of the search.
     // The integer dist rides through localTopK as a double: values are
@@ -720,8 +674,8 @@ object Embeddings {
     vectors
       .select(col("vec_id").as("neighbor_id"), col("embedding"),
         explode(cellOf(col("embedding"))).as("cell"))
-      .withColumn("_nv", normalizedCol(col("embedding")))
-      .withColumn("pq", pqCodesCol(col("_nv"), cb))
+      .withColumn("_nv", NormalizeFloats(col("embedding")))
+      .withColumn("pq", PqEncode(col("_nv"), cb))
       .select(col("cell"), col("neighbor_id"), col("pq"))
   }
 
@@ -740,14 +694,14 @@ object Embeddings {
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding"),
         explode(probeOf(col("embedding"))).as("cell"))
-      .withColumn("qnv", normalizedCol(col("embedding")))
+      .withColumn("qnv", NormalizeFloats(col("embedding")))
       .select(col("cell"), col("query_id"), col("qnv"))
     // every corpus vector lives in exactly one cell, so a (query, neighbor)
     // pair meets at most once across the probed cells — no dedup needed
     val scored = coded.join(broadcast(q), Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        adcCol(col("qnv"), col("pq"), cb).as("_s"))
+        PqAdcDist(col("qnv"), col("pq"), cb).as("_s"))
     val short = localTopK(scored, shortlist, asc = true)
       .withColumn("_sr", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("_s"), col("neighbor_id"))))
@@ -820,7 +774,7 @@ object Embeddings {
     val v = withNorm(vectors.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv")),
       "nv", "nn")
     val scored = cands.join(broadcast(q), Seq("query_id")).join(v, Seq("neighbor_id"))
-      .withColumn("cosine", dotCol(col("qv"), col("nv")) / (col("qn") * col("nn")))
+      .withColumn("cosine", FloatDotProduct(col("qv"), col("nv")) / (col("qn") * col("nn")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))

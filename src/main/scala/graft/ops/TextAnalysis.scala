@@ -342,7 +342,7 @@ object TextAnalysis {
 
   /** Content-defined-chunking dedup — the storage-side dedup below the
     * semantic layer: chunk each (pre-normalized) document at positional
-    * rolling-hash boundaries (native [[graft.functions.CdcChunks]] kernel;
+    * rolling-hash boundaries (native [[graft.functions.SigExprs.cdcChunks]] kernel;
     * boundaries survive edits elsewhere in the doc, unlike fixed-width
     * chunking), keep the globally-first instance of each chunk, report
     * per-doc chunk/kept counts and total/saved bytes.
@@ -376,7 +376,7 @@ object TextAnalysis {
   /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD
     * 2003 — the MOSS local fingerprinting scheme): hash every char k-gram
     * of the normalized text, select the minimum key in each window of `w`
-    * consecutive positions (native codegen [[graft.functions.WinnowKeys]]
+    * consecutive positions (native codegen [[graft.functions.SigExprs.winnowKeys]]
     * kernel; earliest-position tie rule packed into the key's low bits so
     * a SQL oracle replays the selection with pure integer arithmetic).
     * Emits per doc: gram count, distinct selected-fingerprint count, and a

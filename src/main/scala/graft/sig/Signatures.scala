@@ -4,7 +4,10 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
+import graft.functions.{NativeKernel, SigKernels, TextNorm}
+import graft.functions.NativeKernel.{Ints, Longs, Strings}
 import graft.model.DedupConfig
 
 /** Signature kernels: normalization, shingling, MinHash, SimHash.
@@ -100,9 +103,10 @@ object Signatures {
     * trimmed) so word tokenization survives — a documented deviation.
     * Backed by the codegen'd single-pass kernel [[graft.functions.TextNorm]].
     */
-  def normalize(s: String): String = graft.functions.TextNorm.normalize(s)
+  def normalize(s: String): String = TextNorm.normalize(s)
 
-  def normalizeCol(c: Column): Column = graft.functions.NormalizeText(c)
+  def normalizeCol(c: Column): Column =
+    NativeKernel.call("NormalizeText", TextNorm, "normalizeUtf8", StringType, c -> StringType)()
 
   /** Identical normalization in DuckDB SQL (needs explicit 'g' flag;
     * `strip_accents` is DuckDB's NFD-fold analog).
@@ -273,12 +277,10 @@ object Signatures {
   }
 
   // --------------------------------------- Column forms (native, codegen'd)
-  // All signature Column APIs are native Catalyst expressions
-  // (graft.functions.SigExprs) — no Scala UDFs anywhere in the feature or
-  // blocking paths; the Scala functions above remain as the unit-test /
-  // in-memory-oracle mirrors.
-
-  import graft.functions.SigExprs
+  // Each signature Column API calls its kernel in graft.functions.SigKernels
+  // through one NativeKernel expression — no Scala UDFs anywhere in the
+  // feature or blocking paths; the Scala functions above remain as the
+  // unit-test / in-memory-oracle mirrors.
 
   /** MinHash signature of a STRING shingle array (oracle-mirrored catalog
     * path): hash60 each shingle with built-in md5/conv expressions, then the
@@ -290,52 +292,55 @@ object Signatures {
     minHashFromHashesCol(transform(shinglesCol, s => hash60Col(s)), cfg)
 
   def minHashFromHashesCol(hashedShingles: Column, cfg: DedupConfig): Column =
-    SigExprs.minHashFromHashes(hashedShingles,
-      seedsA(cfg.numHashes, cfg.seed), seedsB(cfg.numHashes, cfg.seed))
+    NativeKernel.call("MinHashFromHashes", SigKernels, "minHashFromHashes", Longs,
+      hashedShingles -> Longs)(seedsA(cfg.numHashes, cfg.seed), seedsB(cfg.numHashes, cfg.seed))
 
   /** MinHash over the 32-bit shingle feature (array<int>, sign-extended
     * per element) — the pipeline's form; same permutations as
     * [[minHashFromHashesCol]].
     */
   def minHashFromIntHashesCol(hashedShingles32: Column, cfg: DedupConfig): Column =
-    SigExprs.minHashFromIntHashes(hashedShingles32,
-      seedsA(cfg.numHashes, cfg.seed), seedsB(cfg.numHashes, cfg.seed))
+    NativeKernel.call("MinHashFromIntHashes", SigKernels, "minHashFromIntHashes", Longs,
+      hashedShingles32 -> Ints)(seedsA(cfg.numHashes, cfg.seed), seedsB(cfg.numHashes, cfg.seed))
 
   /** String band keys ("band:v1,v2,...") — exact mirror of [[bandKeys]] and
     * the oracle's string_agg form.
     */
   def bandKeysCol(sigCol: Column, bands: Int): Column =
-    SigExprs.bandKeyStrings(sigCol, bands)
+    NativeKernel.call("BandKeyStrings", SigKernels, "bandKeyStrings", Strings, sigCol -> Longs)(bands)
 
   /** Hashed long band keys — the pipeline's compact blocking index (8-byte
     * keys; high 6 bits zero, namespaced against packed bit-block keys).
     */
   def bandHashKeysCol(sigCol: Column, bands: Int): Column =
-    SigExprs.bandHashKeys(sigCol, bands)
+    NativeKernel.call("BandHashKeys", SigKernels, "bandHashKeys", Longs, sigCol -> Longs)(bands)
 
   /** SimHash of a normalized string's space-separated tokens, hash60 token
     * hash (oracle-mirrored catalog path). Equals
     * simHash(words(norm), bits).
     */
   def simHashWordsCol(normCol: Column, bits: Int): Column =
-    SigExprs.simHashWords(normCol, bits, fast = false)
+    NativeKernel.call("SimHashWords", SigKernels, "simHashWords", LongType, normCol -> StringType)(
+      bits, false)
 
   /** Pipeline-side SimHash over xxhash64 token hashes, straight off the
     * normalized string (no token array materialized). Equals
     * simHashWith(words(norm), bits, fastHash).
     */
   def simHashFastCol(normCol: Column, bits: Int): Column =
-    SigExprs.simHashWords(normCol, bits, fast = true)
+    NativeKernel.call("SimHashWords", SigKernels, "simHashWords", LongType, normCol -> StringType)(
+      bits, true)
 
   def bitBlockKeysCol(hCol: Column, blocks: Int, totalBits: Int): Column =
-    SigExprs.bitBlockKeyStrings(hCol, blocks, totalBits)
+    NativeKernel.call("BitBlockKeyStrings", SigKernels, "bitBlockKeyStrings", Strings,
+      hCol -> LongType)(blocks, totalBits)
 
   /** Sorted distinct xxhash64 char-k shingle hashes of a normalized string —
     * the pipeline feature kernel (set-equal to
     * shingles(norm,k).map(fastHash)).
     */
   def hashedShinglesCol(normCol: Column, k: Int): Column =
-    SigExprs.hashedShingles(normCol, k)
+    NativeKernel.call("HashedShingles", SigKernels, "hashedShingles", Longs, normCol -> StringType)(k)
 
   /** Sorted distinct 32-bit (`fastHash(_).toInt`) char-k shingle hashes —
     * the flagship pipeline feature (set-equal to
@@ -343,12 +348,13 @@ object Signatures {
     * why 32 bits.
     */
   def hashedShingles32Col(normCol: Column, k: Int): Column =
-    SigExprs.hashedShingles32(normCol, k)
+    NativeKernel.call("HashedShingles32", SigKernels, "hashedShingles32", Ints,
+      normCol -> StringType)(k)
 
   /** Sorted distinct hash60 char-k shingle hashes — the oracle-mirrorable
     * (md5-based) feature kernel of the MinHash catalog queries (set-equal
     * to shingles(norm,k).map(hash60)).
     */
   def hash60ShinglesCol(normCol: Column, k: Int): Column =
-    SigExprs.hash60Shingles(normCol, k)
+    NativeKernel.call("Hash60Shingles", SigKernels, "hash60Shingles", Longs, normCol -> StringType)(k)
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** Phonetic codec transforms (ref `CommonTransformations.java:74-139`):
-  * soundex is a Spark built-in; cologne / refined-soundex / beider-morse
-  * wrap commons-codec (already on the Spark classpath). Each returns the
-  * encoded string; equality of encodings is the phonetic similarity
+  * soundex is a Spark built-in; cologne / beider-morse wrap commons-codec
+  * (already on the Spark classpath). Each returns the encoded string;
+  * equality of encodings is the phonetic similarity
   * (`equality.of(soundex())` composition in the reference).
   */
 object Phonetics {
@@ -15,13 +15,6 @@ object Phonetics {
     val f = udf((s: String) =>
       if (s == null) null
       else new org.apache.commons.codec.language.ColognePhonetic().encode(s))
-    c => f(c)
-  }
-
-  val refinedSoundex: Column => Column = {
-    val f = udf((s: String) =>
-      if (s == null) null
-      else org.apache.commons.codec.language.RefinedSoundex.US_ENGLISH.encode(s))
     c => f(c)
   }
 
@@ -40,7 +33,7 @@ object Phonetics {
 
   /** Generic wrapper for ANY commons-codec StringEncoder (ref
     * `CommonTransformations.codec`, `CommonTransformations.java:131-139`) —
-    * the three named codecs above are instances of this.
+    * the two named codecs above are instances of this.
     */
   def codec(enc: () => org.apache.commons.codec.StringEncoder): Column => Column = {
     val f = udf((s: String) => if (s == null) null else enc().encode(s).toString)

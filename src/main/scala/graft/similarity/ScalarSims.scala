@@ -244,7 +244,6 @@ object ScalarSims {
   def minOf[T](ss: Sim[T]*): Sim[T] = aggregate(ss, _.min)
   def meanOf[T](ss: Sim[T]*): Sim[T] = aggregate(ss, vs => vs.sum / vs.size)
   def firstOf[T](ss: Sim[T]*): Sim[T] = aggregate(ss, _.head)
-  def lastOf[T](ss: Sim[T]*): Sim[T] = aggregate(ss, _.last)
 
   def weightedAverage[T](ws: Seq[(Double, Sim[T])]): Sim[T] = (l, r) => {
     var num = 0.0; var den = 0.0

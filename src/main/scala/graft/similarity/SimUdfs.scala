@@ -7,8 +7,8 @@ import graft.similarity.ScalarSims._
 
 /** UDF bridges from the Scala-level [[ScalarSims]] to Columns, for the
   * collection-valued measures that have no Catalyst primitive (Monge-Elkan,
-  * stable matching, Jaro-Winkler, histogram cosine). NaN-unknown becomes
-  * null at this boundary (SURVEY.md §1.2).
+  * Jaro-Winkler, histogram cosine). NaN-unknown becomes null at this
+  * boundary (SURVEY.md §1.2).
   *
   * These evaluate per-row over small bags — the reference invokes the same
   * sequential algorithms per candidate pair (`MongeElkan.java:53-94`,
@@ -29,15 +29,6 @@ object SimUdfs {
   def mongeElkanLevCol(maxPositionDiff: Int = Int.MaxValue): (Column, Column) => Column = {
     val inner: Sim[String] = nullSafe(levenshtein())
     val s = mongeElkan(inner, maxPositionDiff)
-    val f = udf((l: Seq[String], r: Seq[String]) =>
-      if (l == null || r == null) None else lift(s(l, r)))
-    (l, r) => f(l, r)
-  }
-
-  /** Stable-matching similarity over token arrays with inner Jaro-Winkler. */
-  def stableMatchingJwCol(boostThreshold: Double = 0.0): (Column, Column) => Column = {
-    val inner: Sim[String] = nullSafe(jaroWinkler(boostThreshold))
-    val s = stableMatching(inner)
     val f = udf((l: Seq[String], r: Seq[String]) =>
       if (l == null || r == null) None else lift(s(l, r)))
     (l, r) => f(l, r)

@@ -56,15 +56,6 @@ object Sims {
         })
   }
 
-  /** Jaccard over array columns: |∩|/|∪| on distinct elements
-    * (ref `jaccard`, :88-93) — `size(array_intersect)/size(array_union)`.
-    */
-  val jaccardArr: CSim = nullSafe { (l, r) =>
-    val u = size(array_union(l, r))
-    when(u === 0, 1.0)
-      .otherwise(size(array_intersect(l, r)).cast("double") / u)
-  }
-
   /** max(0, 1-|Δ|/maxDiff) for numeric columns (ref `scaledDifference`,
     * :369-388); for temporals pass unix_timestamp/datediff columns.
     */
@@ -83,11 +74,6 @@ object Sims {
   /** Normalized Hamming similarity of two 64-bit hash columns. */
   def hammingSim(bits: Int): CSim =
     nullSafe((l, r) => lit(1.0) - bit_count(l.bitwiseXOR(r)).cast("double") / bits)
-
-  /** Soundex phonetic equality (ref `CommonTransformations.soundex`,
-    * :98-100; built-in).
-    */
-  val soundexEq: CSim = nullSafe((l, r) => (soundex(l) === soundex(r)).cast("double"))
 
   // ---------------------------------------------------------- combinators
   // Ref: `SimilarityMeasure.java` default methods (SURVEY.md §2.4 table 1).

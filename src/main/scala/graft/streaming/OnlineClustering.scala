@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
+import graft.model.IdOrdering
+
 /** Online cluster re-emission: duplicate edges stream in, UPDATED cluster
   * assignments stream out — the Structured Streaming analog of the
   * reference's online duplicate detection
@@ -11,7 +13,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * .java:34-65`: one record in → the record's updated clusters out).
   *
   * Semantics per micro-batch: every edge unions its endpoints' clusters
-  * (cluster id = min member id, the batch ClusterIdGenerator); every
+  * (cluster id = min member id under [[IdOrdering]], the batch
+  * ClusterIdGenerator and CC's order); every
   * cluster TOUCHED by the batch — including one that merely absorbed a
   * duplicate it already contained — re-emits ALL its members with their
   * (possibly new) cluster id, so a downstream consumer that keeps each
@@ -58,7 +61,7 @@ object OnlineClustering {
               parent += (a -> ra, b -> ra)
               touched += ra
             } else {
-              val (win, lose) = if (ra < rb) (ra, rb) else (rb, ra)
+              val (win, lose) = if (IdOrdering.string.lt(ra, rb)) (ra, rb) else (rb, ra)
               // relabel the absorbed cluster; its former id may have been
               // emitted before, so the whole merged cluster re-emits below
               parent = parent.map { case (id, r) =>
