@@ -2123,12 +2123,12 @@ FROM b"""
 
   // ---------------------------------------------- flagship pipeline oracle
 
-  /** Full 6-stage dedup pipeline (features -> multi-pass blocking -> rule
-    * cascade verify -> transitive closure -> refine -> fusion,
-    * `app.Pipeline.run`) over the deterministic ImageGen corpus, hash-gated
-    * against the BRUTE-FORCE oracle: `gen.PipeOracle` applies the verify
-    * cascade to every pair (no blocking, no LSH, no distributed machinery)
-    * and union-finds the closure on the driver; the side table stores that
+  /** The flagship itself, `app.Pipeline.run` (features -> multi-pass
+    * blocking -> rule cascade verify -> transitive closure -> fusion), over
+    * the deterministic ImageGen corpus, hash-gated against the BRUTE-FORCE
+    * oracle: `gen.PipeOracle` applies the verify cascade to every pair (no
+    * blocking, no LSH, no distributed machinery) and union-finds the
+    * closure on the driver; the side table stores that
     * expected assignment plus generator caption/fmt, and the DuckDB oracle
     * derives the expected canonical per cluster (min-id cluster id, member
     * count, fused caption = longest -> most-frequent -> first-by-id, fused
@@ -2139,18 +2139,14 @@ FROM b"""
     * distributed analog of the reference's own e2e equality check
     * (`examples/src/test/java/.../PersonDeduplicationTest.java:69-86`).
     *
-    * Two deliberate oracle choices:
-    *  - raw planted gold is NOT the truth: ~5% of planted edits are
-    *    legitimately unrecoverable (below every similarity threshold), so
-    *    ground truth is the cascade's own all-pairs closure, as in
-    *    PipelineSpec;
-    *  - the refine stage is excluded HERE (clustered rows feed fusion
-    *    straight from CC): refine intentionally re-partitions weak-cohesion
-    *    TC clusters, so its output has no ground truth independent of its
-    *    own algorithm — the reference e2e test freezes a fixture for this;
-    *    our refine hash gate is the separate `refine_clusters` oracle plus
-    *    the reference-fixture unit tests and PipelineSpec's split-only /
-    *    fused-output invariants over the full 6-stage run.
+    * Raw planted gold is NOT the truth: ~5% of planted edits are
+    * legitimately unrecoverable (below every similarity threshold), so
+    * ground truth is the cascade's own all-pairs closure, as in
+    * PipelineSpec. Refine is not part of `Pipeline.run`: its output has no
+    * ground truth independent of its own algorithm, so the explicit
+    * `Pipeline.refine` stage is gated by the separate `refine_clusters`
+    * oracle plus the reference-fixture unit tests and PipelineSpec's
+    * split-only invariants.
     */
   val pipeN = 1000L
   val pipeSeed = 42L
@@ -2167,16 +2163,10 @@ FROM b"""
     }
 
   def pipelineCanonical(spark: SparkSession, dir: String): DataFrame = {
-    import graft.app.Pipeline
-    val cfg = graft.model.DedupConfig()
     val gen = graft.gen.ImageGen.generate(spark, pipeN, seed = pipeSeed, partitions = 8)
     ensurePipeTruth()
-    val df = graft.gen.ImageGen.asImages(gen).toDF()
-    val feats = Pipeline.features(df, cfg).persist()
-    feats.count() // fan-out barrier: see Pipeline.run
-    val scored = Pipeline.classified(feats, Pipeline.candidates(feats, cfg), cfg)
-    val assign = Pipeline.cluster(feats, scored)
-    Pipeline.fuse(df, assign).toDF()
+    val images = graft.gen.ImageGen.asImages(gen)
+    graft.app.Pipeline.run(spark, images, graft.model.DedupConfig())._2
       .select(col("cluster_id"), col("n_members"), col("image_id"),
         col("caption"), col("fmt"))
   }

@@ -17,9 +17,9 @@ object SparkEntry {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Flagship query; driver smoke-checks rows>0. Runs the FULL 6-stage
-    * near-dup pipeline (features -> multi-pass blocking -> rule-cascade
-    * verify -> connected components -> refine -> fusion) on a 2000-row
+  /** Flagship query; driver smoke-checks rows>0. Runs the full 5-stage
+    * near-dup pipeline, `Pipeline.run` (features -> multi-pass blocking ->
+    * rule-cascade verify -> connected components -> fusion) on a 2000-row
     * deterministic synthetic image+caption table (the north_rule input
     * shape) and returns the canonical records.
     */

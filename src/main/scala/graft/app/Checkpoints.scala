@@ -105,9 +105,9 @@ object Checkpoints {
     }.mkString("[", ",", "]")
   }
 
-  /** Full pipeline with per-stage checkpoints: resumable end-to-end run.
-    * Stages: features, candidates (+skew sidecar), scored, assign_tc
-    * (+CC rounds sidecar), assign_refined (+splits sidecar), canonical.
+  /** Full pipeline with per-stage checkpoints: resumable end-to-end run of
+    * the [[Pipeline.run]] chain. Stages: features, candidates (+skew
+    * sidecar), scored, assign_tc (+CC rounds sidecar), canonical.
     */
   def runCheckpointed(spark: SparkSession, images: DataFrame, workDir: String,
                       cfg: graft.model.DedupConfig): DataFrame = {
@@ -131,23 +131,11 @@ object Checkpoints {
     // CC explains its rounds the same way: the stats arrive only when the
     // stage computes, so a resumed run keeps the original sidecar
     var ccStats = Option.empty[graft.cluster.ConnectedComponents.Stats]
-    val assign0 = cp.stage("04_assign_tc", partitionBy = Seq("pb"))(
+    val assign = cp.stage("04_assign_tc", partitionBy = Seq("pb"))(
       withPb(Pipeline.cluster(feats, scored, s => ccStats = Some(s)))).drop("pb")
     ccStats.foreach(s => cp.writeMetrics("04_assign_tc_cc",
       s"""{"stage":"04_assign_tc","distributed_rounds":${s.distributedRounds},""" +
         s""""driver_edges":${s.driverEdges}}"""))
-    // ClusterSplitHandler contract (ref core/.../ClusterSplitHandler.java:
-    // 37-69; SURVEY.md §2.5): splits are observable in metrics. The counter
-    // only accumulates when the stage actually computes, so the sidecar is
-    // written exactly then (a resumed run keeps the original sidecar).
-    val refineComputed = !cp.isComplete("05_assign_refined")
-    val splits = spark.sparkContext.longAccumulator("n_split_clusters")
-    val assign = cp.stage("05_assign_refined", partitionBy = Seq("pb"))(
-      withPb(Pipeline.refine(assign0, feats, scored, cfg, splitCounter = Some(splits))))
-      .drop("pb")
-    if (refineComputed)
-      cp.writeMetrics("05_assign_refined_splits",
-        s"""{"stage":"05_assign_refined","n_split_clusters":${splits.value}}""")
-    cp.stage("06_canonical")(Pipeline.fuse(images, assign).toDF())
+    cp.stage("05_canonical")(Pipeline.fuse(images, assign).toDF())
   }
 }

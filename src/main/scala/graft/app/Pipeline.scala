@@ -14,9 +14,12 @@ import graft.similarity.{ScalarSims, Sims}
 
 /** The full dedup pipeline over an image+caption table — the batch
   * re-expression of the reference's 4-stage flow
-  * (records -> blocking -> classification -> clustering(+refine) -> fusion,
+  * (records -> blocking -> classification -> clustering -> fusion,
   * `OnlinePairBasedDuplicateDetection.java:81-93`,
   * `FusingOnlineDeduplication.java:48-80`) as Dataset transforms.
+  * [[run]] chains the five stages features -> candidates -> classified ->
+  * cluster -> fuse; [[refine]] is an explicit stage a caller may insert
+  * between cluster and fuse, never part of the default chain.
   *
   * Scale discipline (100 TB):
   *  - the binary payload never shuffles: stage 1 projects features
@@ -26,8 +29,9 @@ import graft.similarity.{ScalarSims, Sims}
   *  - blocking unions 4 passes (MinHash/LSH, SimHash blocks, phash blocks,
   *    substring) and dedups candidate pairs BEFORE verification;
   *  - verification is one codegen'd projection (rule cascade);
-  *  - CC is O(log n) rounds of sort-merge joins; refine touches only
-  *    clustered rows via cogroup.
+  *  - CC is O(log n) rounds of sort-merge joins, finished on the driver
+  *    once the edge set fits; refine touches only clustered rows via
+  *    cogroup.
   */
 object Pipeline {
 
@@ -150,10 +154,10 @@ object Pipeline {
     ConnectedComponents.assignAll(feats, "id", dupEdges, onStats)
   }
 
-  /** Stage 5: precision refinement — [[Refine.refineAll]] over the CC
-    * assignment, with known edges weighted by their stage-3 classification
-    * and missing pairs scored by the stage-3 weighted-average rule
-    * (shingle Jaccard x2, phash and simhash Hamming similarity) at the
+  /** Explicit refinement stage, not part of [[run]]: [[Refine.refineAll]]
+    * over the CC assignment, with known edges weighted by their stage-3
+    * classification and missing pairs scored by the stage-3 weighted-average
+    * rule (shingle Jaccard x2, phash and simhash Hamming similarity) at the
     * verify threshold.
     */
   def refine(assign: DataFrame, feats: DataFrame, scored: Dataset[ScoredEdge],
@@ -181,7 +185,7 @@ object Pipeline {
   final case class FuseRec(image_id: String, caption: String, fmt: String,
                            w: Int, h: Int, phash: Long)
 
-  /** Stage 6: conflict-resolution fusion — one canonical record per cluster
+  /** Stage 5: conflict-resolution fusion — one canonical record per cluster
     * via the Merge DSL in mapGroups; singletons pass through
     * (ref `ConflictResolutionFusion.java:77-79`). Members are sorted and the
     * canonical id picked under [[IdOrdering]], so the canonical record of
@@ -216,9 +220,12 @@ object Pipeline {
       }
   }
 
-  /** Full run: returns (assignments, canonicals). Stages persist at
-    * boundaries (the in-memory stand-in for per-stage Iceberg checkpoints;
-    * `runCheckpointed` writes real parquet checkpoints).
+  /** Full run, features -> candidates -> classified -> cluster -> fuse:
+    * returns (CC assignments, canonicals). The one place the flagship
+    * stages are sequenced; `pipeline_canonical` hash-gates its output.
+    * Stages persist at boundaries (the in-memory stand-in for per-stage
+    * Iceberg checkpoints; `Checkpoints.runCheckpointed` writes real
+    * parquet checkpoints of the same chain).
     */
   def run(spark: SparkSession, images: Dataset[ImageRecord], cfg: DedupConfig)
       : (DataFrame, Dataset[Canonical]) = {
@@ -236,8 +243,7 @@ object Pipeline {
       col("w"), col("h"), col("phash")).persist(StorageLevel.MEMORY_AND_DISK)
     val cands = candidates(feats, cfg)
     val scored = classified(feats, cands, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    val assign0 = cluster(feats, scored)
-    val assign = refine(assign0, feats, scored, cfg)
+    val assign = cluster(feats, scored)
     val canon = fuse(slim, assign)
     (assign, canon)
   }

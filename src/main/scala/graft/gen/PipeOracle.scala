@@ -6,7 +6,7 @@ import graft.sig.Signatures
 /** Single-node brute-force oracle for the full dedup pipeline: applies the
   * verify cascade's exact semantics to EVERY pair (no blocking, no LSH, no
   * distributed machinery) and takes the union-find transitive closure —
-  * the ground truth the distributed 6-stage pipeline must reproduce
+  * the ground truth the distributed 5-stage pipeline must reproduce
   * pair-for-pair (the in-memory analog of the reference's e2e expected-set
   * check, `examples/src/test/java/.../PersonDeduplicationTest.java:69-86`).
   *

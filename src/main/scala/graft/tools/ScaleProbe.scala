@@ -15,7 +15,7 @@ import graft.model.DedupConfig
   * report the constants the bucket caps / CC loop / substring collect were
   * only ever measured at n<=600k:
   *
-  *   - wall seconds + images/sec for the full 6-stage pipeline at `cores`
+  *   - wall seconds + images/sec for the full 5-stage pipeline at `cores`
   *   - per-blocking-pass pairs, buckets dropped by the skew cap, pairs
   *     dropped, max bucket size (lsh / simhash / phash passes)
   *   - substring probe-key count (the driver-collect vs shard-switch input)

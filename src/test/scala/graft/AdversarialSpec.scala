@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Standing adversarial-corpus sweep (VERDICT r4 task 7).
@@ -19,8 +22,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * (verified green for the full catalog; the divergences it caught and
   * their defined-semantics fixes are recorded in BASELINE.md).
+  *
+  * The temp corpus and the ANN side tables trained on it are deleted
+  * after the suite, so a run leaves nothing under `/tmp`.
   */
-class AdversarialSpec extends AnyFunSuite {
+class AdversarialSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -34,11 +40,19 @@ class AdversarialSpec extends AnyFunSuite {
     s
   }
 
+  private var made = Option.empty[String]
+
   lazy val dir: String = {
     val d = java.nio.file.Files.createTempDirectory("graft-adv").toString
+    made = Some(d)
     graft.tools.AdversarialGen.writeCorpus(spark, "/root/testdata/sf0.001", d)
     d
   }
+
+  override def afterAll(): Unit =
+    try made.foreach(d => Seq(d, ExtQueries.annIvfCentsPath(d), ExtQueries.annPqCbPath(d))
+      .foreach(p => TestFiles.deleteTree(Paths.get(p))))
+    finally super.afterAll()
 
   test("every catalog query runs on the adversarial corpus") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>

@@ -49,12 +49,6 @@ class AnnSideTableSpec extends AnyFunSuite {
     finally files.close()
   }
 
-  private def deleteTree(p: Path): Unit = if (Files.exists(p)) {
-    val all = Files.walk(p)
-    try all.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-    finally all.close()
-  }
-
   test("trained ANN side tables are keyed by input dir: a second corpus leaves the first's intact") {
     val (a, b) = (corpus(0.11), corpus(-0.53))
     def tables(dir: String): Seq[Path] =
@@ -70,6 +64,7 @@ class AnnSideTableSpec extends AnyFunSuite {
       train(b)
       assert(tables(a).map(snapshot) == before, "training on a second corpus rewrote the first's tables")
       assert(tables(b).intersect(tables(a)).isEmpty)
-    } finally (Seq(a, b).map(Paths.get(_)) ++ tables(a) ++ tables(b)).foreach(deleteTree)
+    } finally
+      (Seq(a, b).map(Paths.get(_)) ++ tables(a) ++ tables(b)).foreach(TestFiles.deleteTree)
   }
 }

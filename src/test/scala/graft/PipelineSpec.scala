@@ -116,6 +116,32 @@ class PipelineSpec extends AnyFunSuite {
     assert(recall >= 0.95, s"gold recall $recall")
   }
 
+  test("Pipeline.run keeps planted families whole at 6k (the flagship_dup input, seed 1): " +
+    "gold dup-pair recall >= 0.97, precision >= 0.99") {
+    // the default mix plants two big families (n/40 and n/60 members) that
+    // hold most gold pairs; counted as perfbench's Checks.flagship counts
+    // them: pairs sharing both a gold and a predicted cluster, over the
+    // pairs inside gold clusters (recall) or predicted clusters (precision)
+    val s = spark
+    import s.implicits._
+    val corpus = ImageGen.generate(spark, 6000L, seed = 1L, partitions = 8).cache()
+    val gold = corpus.select("image_id", "gold_cluster").as[(String, String)].collect().toMap
+    val assign = Pipeline.run(spark, ImageGen.asImages(corpus), cfg)._1
+      .as[(String, String)].collect()
+    def pairs(sizes: Iterable[Int]): Long = sizes.map(k => k.toLong * (k - 1) / 2).sum
+    val together = pairs(assign.groupBy { case (id, c) => (gold(id), c) }.values.map(_.length))
+    val goldPairs = pairs(gold.groupBy(_._2).values.map(_.size))
+    val predPairs = pairs(assign.groupBy(_._2).values.map(_.length))
+    val recall = together.toDouble / goldPairs
+    val precision = together.toDouble / predPairs
+    info(s"gold pairs=$goldPairs predicted=$predPairs together=$together " +
+      s"recall=$recall precision=$precision")
+    assert(assign.length == gold.size, "every input id is assigned once")
+    assert(recall >= 0.97, s"gold dup-pair recall $recall below 0.97")
+    assert(precision >= 0.99, s"gold dup-pair precision $precision below 0.99")
+    corpus.unpersist()
+  }
+
   test("recall holds at a second corpus size (n=3000): capture is not tuned to one n") {
     // The bit-block passes only GUARANTEE capture at Hamming <= 2 (simhash)
     // / <= 1 (phash); duplicates beyond that pigeonhole distance rely on the

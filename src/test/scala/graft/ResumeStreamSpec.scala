@@ -41,7 +41,7 @@ class ResumeStreamSpec extends AnyFunSuite {
 
     val cp = new Checkpoints(spark, work)
     assert(Seq("01_features", "02_candidates", "03_scored", "04_assign_tc",
-      "05_assign_refined", "06_canonical").forall(cp.isComplete))
+      "05_canonical").forall(cp.isComplete))
     // metrics sidecar carries per-output-file lineage
     val m = cp.metrics("03_scored").get
     assert(m.contains("\"files\":[") && m.contains("\"rows\":"))
@@ -49,11 +49,6 @@ class ResumeStreamSpec extends AnyFunSuite {
     // (SURVEY.md §7.5 risk 2)
     val skew = cp.metrics("02_candidates_skew").get
     assert(skew.contains("\"pass\":\"lsh\"") && skew.contains("\"pairs_dropped\":"))
-    // ClusterSplitHandler contract: refinement splits are persisted to the
-    // metrics sidecar (ref core/.../ClusterSplitHandler.java:37-69)
-    val splits = cp.metrics("05_assign_refined_splits").get
-    assert(splits.contains("\"n_split_clusters\":"),
-      s"splits sidecar must carry the split count: $splits")
     // CC reports its rounds: this corpus is far under the driver-finish
     // bound, so no distributed round runs and every DUPLICATE edge
     // finishes on the driver
@@ -75,8 +70,8 @@ class ResumeStreamSpec extends AnyFunSuite {
     def mtime(s: String) = Files.getLastModifiedTime(Paths.get(s"$work/$s/_SUCCESS")).toMillis
     val featsT = mtime("01_features"); val scoredT = mtime("03_scored")
     import scala.reflect.io.Directory
-    new Directory(new java.io.File(s"$work/05_assign_refined")).deleteRecursively()
-    new Directory(new java.io.File(s"$work/06_canonical")).deleteRecursively()
+    new Directory(new java.io.File(s"$work/04_assign_tc")).deleteRecursively()
+    new Directory(new java.io.File(s"$work/05_canonical")).deleteRecursively()
 
     val out2 = Checkpoints.runCheckpointed(spark, images, work, cfg)
       .collect().map(r => (r.getString(0), r.getString(2))).sorted
