@@ -1056,10 +1056,10 @@ ORDER BY n_users DESC, path LIMIT $topPathsN"""
     * in OpsSpec (float summation is not oracle-portable).
     */
   // Generator parameters shared by every mm query body AND its side-table
-  // writer — and encoded into the side-table PATH together with a schema
-  // version, so changing any of them (or the table's columns) can never
-  // read a stale truth written by an older binary: a new path is simply
-  // built fresh. (The lesson of the hand-bumped "_v2" this replaced.)
+  // writer. A side-table PATH encodes n, seed and a hand-bumped version,
+  // nothing else: a change to the generator, decode or oracle code must
+  // bump the version, or a host that already wrote the table keeps reading
+  // the stale one (keying paths by their inputs: ROADMAP direction 8(a)).
   val mmImageN = 400L;  val mmImageSeed = 7L
   val mmVideoN = 300L;  val mmVideoSeed = 11L
   val mmAudioN = 300L;  val mmAudioSeed = 13L
@@ -1067,12 +1067,12 @@ ORDER BY n_users DESC, path LIMIT $topPathsN"""
   val mmVideoMetaPath = s"/tmp/graft_video_meta_n${mmVideoN}_s${mmVideoSeed}_v1"
   val mmAudioMetaPath = s"/tmp/graft_audio_meta_n${mmAudioN}_s${mmAudioSeed}_v1"
 
-  /** Side tables are pure functions of (generator, n, seed, schema) — all
-    * encoded in the path — so each is written AT MOST ONCE per host
-    * (skipped when the _SUCCESS marker exists): re-runs and concurrent
-    * sessions read identical bytes instead of racing an overwrite, and
-    * repeat invocations of the queries are side-effect-free. One lock
-    * serializes the rare first-write of all three.
+  /** Each side table is written AT MOST ONCE per host (skipped when its
+    * _SUCCESS marker exists): re-runs and concurrent sessions read identical
+    * bytes instead of racing an overwrite. That holds only while the path
+    * (n, seed, version) changes with the contents; ImageGen, decode and
+    * PipeOracle code are not in it (see the version note above). One lock
+    * serializes the rare first-writes.
     */
   private val mmSideTableLock = new Object
   private def ensureSideTable(path: String)(build: => DataFrame): Unit =

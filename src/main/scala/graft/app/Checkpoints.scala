@@ -92,13 +92,18 @@ object Checkpoints {
 
   /** Per-blocking-pass skew report: buckets the cap dropped and the pairs
     * that forfeits (SURVEY.md §7.5 risk 2 — "dropped pairs counted in
-    * metrics"). One JSON array entry per pass.
+    * metrics"). One JSON array entry per capped pass: the three hash-keyed
+    * passes and "substring", whose buckets are its probe keys. For
+    * "substring", `pairs_dropped` counts the pairs among a dropped key's
+    * probers — a lower bound: the candidates a probe key loses are its
+    * probers times the records whose text holds that k-gram.
     */
   def skewMetricsJson(feats: DataFrame, cfg: graft.model.DedupConfig): String = {
     import graft.block.Blocking
-    // the stats run over the SAME keyed passes the pipeline blocks on, so
+    // the stats run over the SAME keyed frames the pipeline blocks on, so
     // the sidecar reports the real buckets, not a parallel reconstruction
-    Blocking.keyedPasses(feats, cfg).map { case (name, keyed) =>
+    val probes = Blocking.substringProbes(feats, "id", "norm", Pipeline.substringK(cfg))
+    (Blocking.keyedPasses(feats, cfg) :+ ("substring" -> probes)).map { case (name, keyed) =>
       val r = Blocking.bucketStats(keyed, cfg.maxBucketSize).head()
       s"""{"pass":"$name","n_buckets":${r.getLong(0)},"n_dropped_buckets":${r.getLong(1)},""" +
         s""""pairs_dropped":${r.getLong(2)},"max_bucket":${r.getLong(3)}}"""

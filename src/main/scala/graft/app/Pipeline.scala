@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.block.Blocking
-import graft.classify.Classifier
+import graft.classify.Verify
 import graft.cluster.{ConnectedComponents, Refine}
 import graft.fuse.Fusion
 import graft.model.{Classification, DedupConfig, IdOrdering, ImageRecord}
 import graft.sig.Signatures
-import graft.similarity.{ScalarSims, Sims}
 
 /** The full dedup pipeline over an image+caption table — the batch
   * re-expression of the reference's 4-stage flow
@@ -26,9 +25,11 @@ import graft.similarity.{ScalarSims, Sims}
   *    (normalized caption, shingles, signatures) and everything downstream
   *    moves only ids + small features; bytes re-join once at fusion,
   *    id-partitioned;
-  *  - blocking unions 4 passes (MinHash/LSH, SimHash blocks, phash blocks,
-  *    substring) and dedups candidate pairs BEFORE verification;
-  *  - verification is one codegen'd projection (rule cascade);
+  *  - blocking unions 5 passes (MinHash/LSH, SimHash blocks, phash blocks,
+  *    substring, exact-content star) and dedups candidate pairs BEFORE
+  *    verification; a null feature is never a blocking key;
+  *  - verification is one kernel call per candidate ([[Verify]], the rule
+  *    cascade), and refine scores its missing pairs with the same method;
   *  - CC is O(log n) rounds of sort-merge joins, finished on the driver
   *    once the edge set fits; refine touches only clustered rows via
   *    cogroup.
@@ -37,9 +38,6 @@ object Pipeline {
 
   final case class ScoredEdge(id1: String, id2: String, classification: String,
                               confidence: Double, explanation: String)
-
-  /** Refine's per-member payload: the features its `classify` reads. */
-  final case class RefineFeat(shs: Seq[Int], phash: Long, simhash: Long)
 
   final case class Canonical(cluster_id: String, n_members: Long, image_id: String,
                              caption: String, fmt: String, w: Int, h: Int,
@@ -77,7 +75,7 @@ object Pipeline {
     // never mix across passes. Identical pair set, 3x fewer stage barriers.
     val keyed = Blocking.keyedUnion(feats, cfg)
     val hashed = Blocking.pairsFromKeys(keyed, cap)
-    val sub = Blocking.substringPairs(feats, "id", "norm", cfg.shingleK + 3, cap)
+    val sub = Blocking.substringPairs(feats, "id", "norm", substringK(cfg), cap)
     // exact-content buckets star to their min id: same clusters, n-1 edges
     // per bucket instead of C(n,2) (a 2500-copy cluster: 2.5k vs 3.1M pairs)
     val exact = Blocking.starPairsFromKeys(
@@ -86,57 +84,23 @@ object Pipeline {
       .dropDuplicates("id1", "id2")
   }
 
-  /** Stage 3: pairwise verification — the reference's ordered rule cascade
-    * as one projection. Rules (first decisive wins):
-    *  1. positive: identical content hash => DUPLICATE @ 1.0
-    *  2. positive: substring containment  => DUPLICATE @ 0.95
-    *  3. negative: tiny caption overlap AND far hashes => NON_DUPLICATE
-    *  4. default threshold rule on weightedAverage{2*jaccard(shingles),
-    *     1*hammingSim(phash), 1*hammingSim(simhash)} @ cfg threshold
-    *     (shape of `PersonClassifier.java:43-57`).
+  /** Probe length of the flagship's substring pass. */
+  def substringK(cfg: DedupConfig): Int = cfg.shingleK + 3
+
+  /** Stage 3: pairwise verification — one [[Verify]] kernel call per
+    * candidate over the two sides' [[Verify.InputType]] structs, each
+    * joined in by id; whole-stage subexpression elimination evaluates the
+    * kernel once per row for its three output fields.
     */
   def classified(feats: DataFrame, cands: DataFrame, cfg: DedupConfig): Dataset[ScoredEdge] = {
-    val f1 = feats.select(col("id").as("id1"), col("norm").as("norm1"),
-      col("shs").as("shs1"), col("phash").as("ph1"), col("simhash").as("sh1"),
-      col("chash").as("ch1"))
-    val f2 = feats.select(col("id").as("id2"), col("norm").as("norm2"),
-      col("shs").as("shs2"), col("phash").as("ph2"), col("simhash").as("sh2"),
-      col("chash").as("ch2"))
-    val paired = cands.join(f1, Seq("id1")).join(f2, Seq("id2"))
-
-    // materialize each expensive measure exactly ONCE behind a projection
-    // boundary — the CASE WHEN cascade references them repeatedly, and
-    // CollapseProject would otherwise inline (re-evaluate) the array
-    // intersection per reference (measured 3.5x slower)
-    val jac0 = graft.functions.SortedIntersect.jaccardSortedInt(col("shs1"), col("shs2"))
-    val phSim0 = Sims.hammingSim(64)(col("ph1"), col("ph2"))
-    val shSim0 = Sims.hammingSim(cfg.simhashBits)(col("sh1"), col("sh2"))
-    val contains0 = (length(col("norm1")) <= length(col("norm2")) &&
-      expr("instr(norm2, norm1) > 0") && length(col("norm1")) >= cfg.shingleK) ||
-      (length(col("norm2")) < length(col("norm1")) &&
-        expr("instr(norm1, norm2) > 0") && length(col("norm2")) >= cfg.shingleK)
-    val sims = paired.select(col("id1"), col("id2"),
-      (col("ch1") === col("ch2")).as("chEq"),
-      jac0.as("jac"), phSim0.as("phsim"), shSim0.as("shsim"),
-      contains0.as("contains"))
-
-    val jac = col("jac"); val phSim = col("phsim"); val shSim = col("shsim")
-    val combined = Sims.weightedAverage(Seq(
-      2.0 -> ((_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column) => jac),
-      1.0 -> ((_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column) => phSim),
-      1.0 -> ((_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column) => shSim)))(lit(0), lit(0))
-
-    val cascade = Classifier.cascade(
-      Classifier.positiveRule("exact-bytes", col("chEq").cast("double")),
-      Classifier.positiveRule("substring", when(col("contains"), 0.95).otherwise(0.0)),
-      Classifier.negativeRule("disjoint",
-        when(jac < 0.05 && phSim < 0.7 && shSim < 0.7, 1.0).otherwise(0.0)),
-      Classifier.thresholdRule("weighted-default", combined, cfg.jaccardThreshold))
-
+    def side(i: Int) = feats.select(col("id").as(s"id$i"), Verify.features.as(s"f$i"))
+    val verdict = Verify(col("f1"), col("f2"), cfg)
     import feats.sparkSession.implicits._
-    Classifier.classify(sims, cascade)
-      .select(col("id1"), col("id2"), col("classification"),
-        coalesce(col("confidence"), lit(0.0)).as("confidence"), col("explanation"))
+    cands.join(side(1), Seq("id1")).join(side(2), Seq("id2"))
+      .select(col("id1"), col("id2"),
+        verdict("classification").as("classification"),
+        verdict("confidence").as("confidence"),
+        verdict("explanation").as("explanation"))
       .as[ScoredEdge]
   }
 
@@ -156,25 +120,22 @@ object Pipeline {
 
   /** Explicit refinement stage, not part of [[run]]: [[Refine.refineAll]]
     * over the CC assignment, with known edges weighted by their stage-3
-    * classification and missing pairs scored by the stage-3 weighted-average
-    * rule (shingle Jaccard x2, phash and simhash Hamming similarity) at the
-    * verify threshold.
+    * classification and missing pairs scored by the stage-3 cascade itself
+    * ([[Verify.classify]] on the members' [[Verify.InputType]] rows), mapped
+    * to a signed weight by [[Refine.classificationWeight]].
     */
   def refine(assign: DataFrame, feats: DataFrame, scored: Dataset[ScoredEdge],
              cfg: DedupConfig,
              splitCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val spark = assign.sparkSession
     import spark.implicits._
-    val members = feats.select(col("id"), struct(col("shs"), col("phash"), col("simhash")))
+    val members = feats.select(col("id"), Verify.features)
     val edges = scored.select(col("id1"), col("id2"),
       Refine.classificationWeight(col("classification"), col("confidence")))
-    val t = cfg.jaccardThreshold
-    val shBits = cfg.simhashBits.toDouble
-    Refine.refineAll[String, RefineFeat](assign, members, edges, { (a, b) =>
-      val jac = ScalarSims.jaccard[Int](a.shs, b.shs)
-      val ph = 1.0 - Signatures.hamming(a.phash, b.phash) / 64.0
-      val sh = 1.0 - Signatures.hamming(a.simhash, b.simhash) / shBits
-      Refine.thresholdWeight((2 * jac + ph + sh) / 4, t)
+    val (k, bits, t) = (cfg.shingleK, cfg.simhashBits, cfg.jaccardThreshold)
+    Refine.refineAll[String, Verify.Feat](assign, members, edges, { (a, b) =>
+      val r = Verify.classify(a.row, b.row, k, bits, t)
+      Refine.classificationWeight(r.getUTF8String(0).toString, r.getDouble(1))
     }, splitCounter)
   }
 

@@ -97,10 +97,11 @@ object Blocking {
     * hash): emit (min_id, other) per bucket instead of all C(n,2) pairs —
     * transitive closure yields the identical cluster from n-1 edges. A
     * 2500-copy bucket costs 2499 pairs instead of 3.1M. Only valid when
-    * verification cannot reject a bucket pair.
+    * verification cannot reject a bucket pair. A null key (no content) is
+    * no key, as in the reference (`OnlineSortedNeighborhoodMethod.java:122-124`).
     */
   def starPairsFromKeys(keyed: DataFrame): DataFrame =
-    keyed.groupBy("key")
+    keyed.where(col("key").isNotNull).groupBy("key")
       .agg(min(col("id")).as("rep"), collect_list(col("id")).as("ids"))
       .where(size(col("ids")) >= 2)
       .select(col("rep"), explode(col("ids")).as("other"))
@@ -130,10 +131,13 @@ object Blocking {
     * construction, so the passes can share one key space. This is the
     * only place the key layout is built: the pipeline pairs their union
     * ([[keyedUnion]]) and the skew reports bucket each pass on its own.
+    * A null feature (a null caption's simhash, a null phash) gives null
+    * keys, which are dropped: null is never a blocking key.
     */
   def keyedPasses(feats: DataFrame, cfg: DedupConfig): Seq[(String, DataFrame)] = {
     val sig = Signatures.minHashFromIntHashesCol(col("shs"), cfg)
-    def keyed(keys: Column) = feats.select(col("id"), explode(keys).as("key"))
+    def keyed(keys: Column) =
+      feats.select(col("id"), explode(keys).as("key")).where(col("key").isNotNull)
     Seq(
       "lsh" -> keyed(Signatures.bandHashKeysCol(sig, cfg.bands)),
       "simhash" -> keyed(packedBitBlockKeys(col("simhash"),
@@ -235,48 +239,47 @@ object Blocking {
       .distinct()
   }
 
+  /** The substring pass's probes as an (id, key) index: each record of at
+    * least `k` characters probes with its first k-gram. Keys are xxhash64
+    * of the k-gram, not the k-gram string: the index side explodes ~|text|
+    * keys per record, so hashing cuts the shuffled key bytes and replaces
+    * string-compare joins with long joins. A hash collision only adds a
+    * candidate; [[substringPairs]] verifies containment exactly.
+    */
+  def substringProbes(records: DataFrame, idCol: String, normCol: String, k: Int): DataFrame =
+    records.where(length(col(normCol)) >= k).select(col(idCol).as("id"),
+      Signatures.fastHashCol(substring(col(normCol), 1, k)).as("key"))
+
   /** Substring-containment pass: pairs (A, B) where A's normalized text is a
     * verbatim substring of B's (the north_star's "suffix-array substring
     * pass" for caption-substring duplicates). Distributed form: index B by
-    * every k-gram, probe with A's first k-gram, verify containment — the
-    * inverted-index equivalent of a suffix scan, expressible as joins so
-    * Catalyst plans the shuffle.
+    * every k-gram, probe with A's first k-gram ([[substringProbes]]), verify
+    * containment — the inverted-index equivalent of a suffix scan,
+    * expressible as joins so Catalyst plans the shuffle.
     */
   def substringPairs(records: DataFrame, idCol: String, normCol: String, k: Int,
                      cap: Option[Int] = None,
                      maxCollectedKeys: Int = 16000000): DataFrame = {
-    // keys are xxhash64 of the k-gram, not the k-gram string: the index
-    // explodes ~|text| keys per record, so hashing cuts the shuffled key
-    // bytes and replaces string-compare joins with long joins. A hash
-    // collision only adds a candidate; the containment verify below is
-    // exact, so results are unchanged.
-    val probe0 = records.select(
-        col(idCol).as("pid"), col(normCol).as("ptext"),
-        Signatures.fastHashCol(substring(col(normCol), 1, k)).as("key"))
-      .where(length(col(normCol)) >= k)
+    val probe0 = substringProbes(records, idCol, normCol, k).withColumnRenamed("id", "pid")
     // skew guard: a prefix key probed by more than `cap` records makes the
-    // bucket join quadratic — drop it (counted by callers via metrics)
+    // bucket join quadratic — drop it (counted by callers via metrics: the
+    // checkpoint skew sidecar's "substring" entry buckets these probes)
     val probe = cap match {
       case Some(c) =>
         val counts = probe0.groupBy("key").agg(count(lit(1)).as("_n"))
         probe0.join(counts.where(col("_n") <= c), Seq("key")).drop("_n")
       case None => probe0
     }
-    // The exploded index is (iid, key) ONLY — carrying the text through the
-    // ~|corpus|·|text| exploded rows multiplies the materialized bytes by
-    // the text length (measured 10 s -> ~2 s at sf0.1). Texts re-attach by
-    // id AFTER the key join, on the (much smaller) candidate set. A (p, i)
-    // pair matches at most once: the probe key is p's single first k-gram
-    // and index keys are distinct per document.
-    // The index side never materializes the ~|corpus|·|text| exploded
-    // k-gram rows: the probe-key set (one 8-byte key per record) is
-    // collected sorted to the driver and pushed INTO a native expression
-    // (KeysInSortedSet) that intersects each document's sorted k-gram
-    // hashes with it in a merge scan — each document emits only its
-    // MATCHING keys (typically a handful), so the explode and the join
-    // machinery never see the non-matches (measured 9.7 s -> ~2 s at
-    // sf0.1; the old form shuffled ~10^8 exploded rows). This is the
-    // broadcast-build side of a hash join expressed as an expression.
+    // The index is (iid, key) ONLY: texts re-attach by id AFTER the key
+    // join, on the much smaller candidate set (carrying them through the
+    // exploded rows: measured 10 s -> ~2 s at sf0.1). While the key set fits
+    // (below), nor does it materialize the ~|corpus|·|text| k-gram rows: the probe-key
+    // set (one 8-byte key per record) is collected sorted to the driver and
+    // pushed INTO KeysInSortedSet, whose merge scan emits only each
+    // document's MATCHING keys (measured 9.7 s -> ~2 s at sf0.1) — the
+    // broadcast-build side of a hash join as an expression. A (p, i) pair
+    // matches at most once: p's probe key is its single first k-gram and
+    // index keys are distinct per document.
     //
     // Driver-memory guard: the collect is bounded by `maxCollectedKeys`
     // (LIMIT max+1 — ONE job detects overflow AND fetches the set, and the
@@ -289,25 +292,14 @@ object Blocking {
     // the right trade only when the build side stops fitting.
     val probeKeyRows = probe.select(col("key")).distinct()
       .limit(maxCollectedKeys + 1).collect()
-    val candIds = if (probeKeyRows.length <= maxCollectedKeys) {
-      val probeKeys: Array[Long] = probeKeyRows.map(_.getLong(0)).sorted
-      val matchedKeys = graft.functions.KeysInSortedSet(
-        Signatures.hashedShinglesCol(col(normCol), k), probeKeys)
-      val index = records.select(col(idCol).as("iid"),
-        explode(matchedKeys).as("key"))
-      broadcast(probe.select(col("pid"), col("key")))
-        .join(index, Seq("key"))
-        .where(col("pid") =!= col("iid"))
-        .select(col("pid"), col("iid"))
-    } else {
-      val index = records.select(col(idCol).as("iid"),
-        explode(Signatures.hashedShinglesCol(col(normCol), k)).as("key"))
-      probe.select(col("pid"), col("key"))
-        .join(index, Seq("key"))
-        .where(col("pid") =!= col("iid"))
-        .select(col("pid"), col("iid"))
-    }
-    candIds
+    val collected = probeKeyRows.length <= maxCollectedKeys
+    val shingles = Signatures.hashedShinglesCol(col(normCol), k)
+    val index = records.select(col(idCol).as("iid"), explode(
+      if (collected) graft.functions.KeysInSortedSet(shingles, probeKeyRows.map(_.getLong(0)).sorted)
+      else shingles).as("key"))
+    (if (collected) broadcast(probe) else probe)
+      .join(index, Seq("key"))
+      .where(col("pid") =!= col("iid"))
       .join(records.select(col(idCol).as("pid"), col(normCol).as("ptext")), Seq("pid"))
       .join(records.select(col(idCol).as("iid"), col(normCol).as("itext")), Seq("iid"))
       .where(length(col("ptext")) <= length(col("itext")) &&

@@ -5,11 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Classification._
 
-/** Pairwise classification: the reference's ordered rule cascade
+/** Pairwise classification DSL for the catalog rows (`classify_rules`,
+  * `refine_clusters`): the reference's ordered rule cascade
   * (bakdata/dedupe `common/dedupe/classifier/RuleBasedClassifier.java:71-381`)
   * re-expressed as a single codegen'd CASE WHEN projection over the pair
   * DataFrame — first rule yielding a non-UNKNOWN result wins (`classify`,
-  * :110-129).
+  * :110-129). The flagship's cascade is not built here: it is one kernel,
+  * [[Verify]].
   *
   * A rule is a nullable struct column `(classification, confidence,
   * explanation)`; null = rule does not apply (the reference's NaN score).
@@ -39,12 +41,6 @@ object Classifier {
   /** Positive rule (:204-222): fires only when the measure is positive. */
   def positiveRule(name: String, sim: Column): Column =
     when(sim > 0, result(Duplicate, sim, name))
-
-  /** Negative rule (:235-255): `sim` here is the *negated* measure — fires
-    * as NON_DUPLICATE when it is positive.
-    */
-  def negativeRule(name: String, negSim: Column): Column =
-    when(negSim > 0, result(NonDuplicate, negSim, name))
 
   /** Possible-duplicate rule: fires as POSSIBLE_DUPLICATE for a downstream
     * policy rewrite (ref `Classification.java:40-47`).

@@ -50,6 +50,11 @@ object Refine {
       .when(classification === Classification.NonDuplicate, -confidence)
       .otherwise(0.0)
 
+  /** [[classificationWeight]] of one scalar result. */
+  def classificationWeight(classification: String, confidence: Double): Double =
+    if (classification == Classification.Duplicate) confidence
+    else if (classification == Classification.NonDuplicate) -confidence else 0.0
+
   /** Signed weight of similarity `s` at threshold `t` — the weight
     * [[classificationWeight]] gives the outcome of
     * [[graft.classify.Classifier.thresholdRule]] (ref `scaleAtThreshold`).

@@ -14,22 +14,27 @@ import org.apache.spark.sql.types._
   * JVM method `owner.method(child values..., consts...)` — the same call in
   * generated code and in interpreted eval. Every codegen'd row kernel of
   * the engine (signatures, ANN, sorted intersection, dot products, Bloom
-  * membership, text normalization) is an instance of this one class; each
-  * kernel's single Column constructor names it. (The [[BucketPairs]]
-  * generator is not a row kernel and keeps its own class.)
+  * membership, text normalization, the flagship's verify cascade) is an
+  * instance of this one class; each kernel's single Column constructor
+  * names it. (The [[BucketPairs]] generator is not a row kernel and keeps
+  * its own class.)
   *
   *  - Display: `name` is the node name, so plans and unaliased column names
   *    read `name.toLowerCase(children...)`, as for a class of that name.
-  *  - Types: every child must have EXACTLY its `inputTypes` entry, and an
-  *    array type matches on its element type alone (parquet schemas mark
-  *    never-null arrays containsNull=true). No cast is ever inserted: a
-  *    kernel reads primitive elements straight out of `ArrayData`, so an
-  *    array<int> read as longs would be silent garbage, and a wrong type
-  *    must fail analysis with the expected types in the message. That is
-  *    why this is not Spark's `StaticInvoke`: its `InvokeLike` mixes in
-  *    `ImplicitCastInputTypes`, which turns a wrong-typed call into a cast.
+  *  - Types: every child must have EXACTLY its `inputTypes` entry, except
+  *    that an array matches on its element type alone and a struct on its
+  *    fields' data types alone (parquet marks never-null arrays
+  *    containsNull=true and every field it reads back nullable). No cast
+  *    is ever inserted: a kernel reads primitive elements straight out of
+  *    `ArrayData`, so an array<int> read as longs would be silent garbage,
+  *    and a wrong type must fail analysis with the expected types in the
+  *    message. That is why this is not Spark's `StaticInvoke`: its
+  *    `InvokeLike` mixes in `ImplicitCastInputTypes`, which turns a
+  *    wrong-typed call into a cast.
   *  - Nulls: the result is null iff some child is null; the kernel never
-  *    sees a null argument.
+  *    sees a null argument. A struct argument built by `struct(...)` is
+  *    never null, but its fields may be: such a kernel reads each field
+  *    with `isNullAt` and decides what a null field means itself.
   *  - Constants: Int, Long, Boolean and Double constants are inlined as
   *    Java literals; arrays (seeds, models, key sets) travel as codegen
   *    reference objects and compare by reference in expression equality,
@@ -55,6 +60,8 @@ case class NativeKernel(
   override def checkInputDataTypes(): TypeCheckResult = {
     def matches(got: DataType, want: DataType): Boolean = (got, want) match {
       case (ArrayType(g, _), ArrayType(w, _)) => g == w
+      case (StructType(g), StructType(w)) => g.length == w.length &&
+        g.zip(w).forall { case (x, y) => matches(x.dataType, y.dataType) }
       case _ => got == want
     }
     if (children.length == inputTypes.length &&

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{lit, size, when}
 import org.apache.spark.sql.types.IntegerType
 
-import NativeKernel.{Ints, Longs}
+import NativeKernel.Longs
 
 /** Intersection cardinality of two SORTED long arrays (merge scan). Kernel
   * of [[SortedIntersect.card]]: `array_intersect` builds a hash set per row
@@ -31,7 +31,8 @@ object SortedLongIntersectCard {
 }
 
 /** Int sibling of [[SortedLongIntersectCard]] for the 32-bit pipeline
-  * shingle feature (array<int>, sorted ascending, distinct).
+  * shingle feature (array<int>, sorted ascending, distinct); the flagship's
+  * verify cascade ([[graft.classify.Verify]]) calls it directly.
   */
 object SortedIntIntersectCard {
   def card(x: ArrayData, y: ArrayData): Int = {
@@ -83,18 +84,6 @@ object SortedIntersect {
   def card(a: Column, b: Column): Column =
     NativeKernel.call("SortedLongIntersectCard", SortedLongIntersectCard, "card", IntegerType,
       a -> Longs, b -> Longs)()
-
-  def cardInt(a: Column, b: Column): Column =
-    NativeKernel.call("SortedIntIntersectCard", SortedIntIntersectCard, "card", IntegerType,
-      a -> Ints, b -> Ints)()
-
-  /** Jaccard over two sorted distinct int arrays (32-bit shingle form). */
-  def jaccardSortedInt(a: Column, b: Column): Column = {
-    val c = cardInt(a, b)
-    val u = size(a) + size(b) - c
-    when(a.isNull || b.isNull, lit(null).cast("double"))
-      .otherwise(when(u === 0, 1.0).otherwise(c.cast("double") / u))
-  }
 
   /** Jaccard over two sorted distinct long arrays: |∩| / |∪| with the exact
     * same integer counts and IEEE division as the array_intersect form.

@@ -4,14 +4,11 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.types.{DataType, StringType}
 
-/** Core data model for the dedup engine.
-  *
-  * Re-expresses the reference's generic record/candidate/cluster types
-  * (bakdata/dedupe `core/dedupe/candidate_selection/Candidate.java:38-52`,
-  * `core/dedupe/clustering/Cluster.java:52-107`) as Spark-encodable case
-  * classes. Where the reference keeps clusters as materialized element lists,
-  * we keep a distributed assignment table `(id -> cluster_id)` so the model
-  * scales to 10^12 rows (SURVEY.md §1.1).
+/** Core data model for the dedup engine. The reference's candidate and
+  * cluster types (bakdata/dedupe `Candidate.java:38-52`,
+  * `Cluster.java:52-107`) are DataFrame shapes here, not element lists:
+  * (id1, id2) pairs and an `(id -> cluster_id)` assignment table, so the
+  * model scales to 10^12 rows (SURVEY.md §1.1).
   */
 
 /** The target table shape (BASELINE.json input_hint):
@@ -26,13 +23,6 @@ final case class ImageRecord(
     caption: String,
     phash: Long)
 
-/** A blocking candidate: canonical unordered pair, id1 < id2.
-  * Ref: `Candidate.java:38-52` / `OfflineCandidate.java:38-50`; canonical
-  * ordering replaces the reference's symmetric-cache trick
-  * (`CachingSimilarity.java:78-83`).
-  */
-final case class CandidatePair(id1: String, id2: String)
-
 /** Classification outcome of a pairwise rule cascade.
   * Ref enum: `core/dedupe/classifier/Classification.java:34-78`.
   * UNKNOWN carries no clustering weight (ibid:54-64); POSSIBLE is a distinct
@@ -44,24 +34,6 @@ object Classification {
   val NonDuplicate = "NON_DUPLICATE"
   val Unknown = "UNKNOWN"
 }
-
-/** A classified candidate with confidence and lineage explanation.
-  * Ref: `ClassificationResult.java:36-56` + `ClassifiedCandidate.java:41-52`.
-  * `confidence` is null-able (None) = unknown; we use null, never NaN
-  * (SURVEY.md §1.2 NaN->null protocol).
-  */
-final case class ScoredPair(
-    id1: String,
-    id2: String,
-    classification: String,
-    confidence: Option[Double],
-    explanation: String)
-
-/** Cluster membership: the distributed inversion of the reference's
-  * `Cluster<C,T>` element list. cluster_id = min member id (deterministic,
-  * unlike the reference's counter ids, `ClusterIdGenerators.java:36-59`).
-  */
-final case class Assignment(id: String, cluster_id: String)
 
 /** The one order of record and cluster ids: Spark's interpreted ordering
   * of the id type — numeric for bigint, UTF-8 byte order for string — the
@@ -81,11 +53,6 @@ object IdOrdering {
   /** UTF-8 byte order of string ids. */
   val string: Ordering[String] = of[String](StringType)
 }
-
-/** An undirected weighted edge between records, used by clustering/refine.
-  * Ref: `core/dedupe/matching/WeightedEdge.java:39-65`.
-  */
-final case class Edge(src: String, dst: String, weight: Double)
 
 /** Pipeline configuration: every seed/threshold pinned for determinism
   * (SURVEY.md §7.5 risk 5).

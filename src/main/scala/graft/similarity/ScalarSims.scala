@@ -242,7 +242,6 @@ object ScalarSims {
     */
   def maxOf[T](ss: Sim[T]*): Sim[T] = aggregate(ss, _.max)
   def minOf[T](ss: Sim[T]*): Sim[T] = aggregate(ss, _.min)
-  def meanOf[T](ss: Sim[T]*): Sim[T] = aggregate(ss, vs => vs.sum / vs.size)
   def firstOf[T](ss: Sim[T]*): Sim[T] = aggregate(ss, _.head)
 
   def weightedAverage[T](ws: Seq[(Double, Sim[T])]): Sim[T] = (l, r) => {

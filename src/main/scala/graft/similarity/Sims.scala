@@ -71,10 +71,6 @@ object Sims {
     nullSafe((l, r) =>
       greatest(lit(0.0), lit(1.0) - abs(datediff(l, r)).cast("double") / maxDays))
 
-  /** Normalized Hamming similarity of two 64-bit hash columns. */
-  def hammingSim(bits: Int): CSim =
-    nullSafe((l, r) => lit(1.0) - bit_count(l.bitwiseXOR(r)).cast("double") / bits)
-
   // ---------------------------------------------------------- combinators
   // Ref: `SimilarityMeasure.java` default methods (SURVEY.md §2.4 table 1).
 
@@ -99,28 +95,8 @@ object Sims {
 
   def unknownIfZero(s: CSim): CSim = unknownIf(_ === 0.0)(s)
 
-  /** Precondition wrapper: predicate false => unknown (does-not-apply)
-    * (ref `RuleBasedClassifier.conditional`, :280-285).
-    */
-  def conditional(pred: (Column, Column) => Column)(s: CSim): CSim =
-    (l, r) => when(pred(l, r), s(l, r))
-
   // aggregations over measures: unknowns (nulls) are skipped; all-unknown
   // => unknown. greatest/least already ignore nulls.
   def maxOf(ss: CSim*): CSim = (l, r) => greatest(ss.map(_(l, r)): _*)
   def minOf(ss: CSim*): CSim = (l, r) => least(ss.map(_(l, r)): _*)
-
-  def meanOf(ss: CSim*): CSim = weightedAverage(ss.map(1.0 -> _))
-
-  /** Σwᵢsᵢ/Σwᵢ over non-unknown components (ref `weightedAverage`,
-    * :429-456; null components drop from numerator and denominator).
-    */
-  def weightedAverage(ws: Seq[(Double, CSim)]): CSim = (l, r) => {
-    val scored = ws.map { case (w, s) => (w, s(l, r)) }
-    val num = scored.map { case (w, v) => when(v.isNotNull, v * w).otherwise(0.0) }
-      .reduce(_ + _)
-    val den = scored.map { case (w, v) => when(v.isNotNull, w).otherwise(0.0) }
-      .reduce(_ + _)
-    when(den > 0, num / den)
-  }
 }

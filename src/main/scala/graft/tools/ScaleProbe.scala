@@ -62,16 +62,16 @@ object ScaleProbe {
         "buckets" -> st.getLong(0), "buckets_dropped" -> st.getLong(1),
         "pairs_dropped" -> st.getLong(2), "max_bucket" -> st.getLong(3))
     }
-    // substring pass: the probe-key cardinality is the driver-collect bound
-    val shortLen = cfg.shingleK + 3
+    // substring pass: its distinct probe keys bound the driver collect
+    val k = Pipeline.substringK(cfg)
     Probe.emit("scale", ListMap(Seq(
       "n" -> n, "cores" -> cores, "input_bytes" -> bytes,
       "pipeline_sec" -> wall, "images_per_sec" -> n / wall, "canonicals" -> nCanon,
       "clusters" -> cl.getLong(0), "max_cluster" -> cl.getLong(1),
       "singletons" -> cl.getLong(2)) ++ passes ++ Seq(
-      "substring_probe_keys" -> feats
-        .where(length(col("norm")).between(cfg.shingleK, shortLen)).count(),
-      "substring_pairs" -> Blocking.substringPairs(feats, "id", "norm", shortLen,
+      "substring_probe_keys" -> Blocking.substringProbes(feats, "id", "norm", k)
+        .select("key").distinct().count(),
+      "substring_pairs" -> Blocking.substringPairs(feats, "id", "norm", k,
         Some(cfg.maxBucketSize)).count(),
       "union_pairs" -> Pipeline.candidates(feats, cfg).count()): _*))
     spark.stop()

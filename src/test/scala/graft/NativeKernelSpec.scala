@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.classify.Verify
 import graft.functions._
 import graft.model.DedupConfig
 import graft.sig.Signatures
@@ -37,8 +38,16 @@ class NativeKernelSpec extends AnyFunSuite {
   private val bloomM = 1024
   private val bloomBits = Array.tabulate(bloomM / 64)(i => 0x5555555555555555L >>> (i % 3))
 
-  /** One input row per `i`; columns carrying a "2" are a kernel's second
-    * child. Row 5 nulls every first child, row 6 every second child.
+  /** A verify side under other field names and with nullable fields, as a
+    * parquet read gives it; `fbad` carries array<bigint> shingles.
+    */
+  private def side(shs: DataType) = StructType(Seq(StructField("c", StringType),
+    StructField("n", StringType), StructField("s", shs), StructField("p", LongType),
+    StructField("q", LongType)))
+
+  /** One input row per `i`; columns carrying a "2" or a "b" are a kernel's
+    * second child. Row 5 nulls every first child, row 6 every second child;
+    * a struct child is never null, so there every field of it is null.
     */
   private val schema = StructType(Seq(
     StructField("id", IntegerType),
@@ -54,7 +63,10 @@ class NativeKernelSpec extends AnyFunSuite {
     StructField("floats", ArrayType(FloatType)),
     StructField("floats2", ArrayType(FloatType)),
     StructField("doubles", ArrayType(DoubleType)),
-    StructField("codes", ArrayType(IntegerType))))
+    StructField("codes", ArrayType(IntegerType)),
+    StructField("fa", side(ArrayType(IntegerType))),
+    StructField("fb", side(ArrayType(IntegerType))),
+    StructField("fbad", side(ArrayType(LongType)))))
 
   private def input: DataFrame = {
     val texts = Seq("", "a", "abcdefgh", "the quick brown fox jumps over the lazy dog",
@@ -68,12 +80,17 @@ class NativeKernelSpec extends AnyFunSuite {
         (0 until dim).map(d => (math.sin(i + d) + 0.1).toFloat),
         (0 until dim).map(d => (math.cos(i * d) + 0.2).toFloat),
         (0 until dim).map(d => math.sin(i * 2 + d) / 2),
-        Seq(i % 3, (i + 1) % 3))
+        Seq(i % 3, (i + 1) % 3),
+        Row(s"c${i % 2}", t, longs.map(_.toInt), (i + 1) * 0x0123456789AL, i.toLong),
+        Row("c0", texts((i + 2) % 5), Seq(1, 2, i), 0x0123456789AL, 3L),
+        Row("c0", t, longs, 0L, 0L))
     }
+    val nullSide = Row(null, null, null, null, null)
     val firstNull = Row(5, null, null, null, 7L, null, Seq(1L), null, Seq(1), null, null,
-      Seq.fill(dim)(1.0f), null, Seq(0, 1))
+      Seq.fill(dim)(1.0f), null, Seq(0, 1), nullSide, Row("c0", "abc", Seq(1), 7L, 7L), nullSide)
     val secondNull = Row(6, "abc", "abc", 7L, null, Seq(1L), null, Seq(1), null,
-      Seq.fill(16)(1L), Seq.fill(dim)(1.0f), null, Seq.fill(dim)(0.5), null)
+      Seq.fill(16)(1L), Seq.fill(dim)(1.0f), null, Seq.fill(dim)(0.5), null,
+      Row("c0", "abc", Seq(1), 7L, 7L), nullSide, nullSide)
     // an RDD-backed frame: a local relation would be folded by the
     // optimizer and never reach the generated code
     spark.createDataFrame(
@@ -106,7 +123,7 @@ class NativeKernelSpec extends AnyFunSuite {
     Kernel("PqAdcDist", Seq("doubles", "codes"), c => PqAdcDist(c(0), c(1), cb)),
     Kernel("SqEncode", Seq("doubles"), c => SqEncode(c(0), sqMins, sqMaxs)),
     Kernel("SortedLongIntersectCard", Seq("longs", "longs2"), c => SortedIntersect.card(c(0), c(1))),
-    Kernel("SortedIntIntersectCard", Seq("ints", "ints2"), c => SortedIntersect.cardInt(c(0), c(1))),
+    Kernel("Verify", Seq("fa", "fb"), c => Verify(c(0), c(1), cfg)),
     Kernel("KeysInSortedSet", Seq("longs"), c => KeysInSortedSet(c(0), probeKeys)),
     Kernel("FloatDotProduct", Seq("floats", "floats2"), c => FloatDotProduct(c(0), c(1))),
     Kernel("LongSqL2", Seq("longs", "longs2"), c => LongSqL2(c(0), c(1))),
@@ -115,7 +132,8 @@ class NativeKernelSpec extends AnyFunSuite {
   /** A column of another type for each input type, for the type check. */
   private val wrongTypeCol = Map(
     "string" -> "h", "bigint" -> "s", "array<bigint>" -> "ints", "array<int>" -> "longs",
-    "array<float>" -> "doubles", "array<double>" -> "floats")
+    "array<float>" -> "doubles", "array<double>" -> "floats",
+    Verify.InputType.simpleString -> "fbad")
 
   private def withConf[T](kv: (String, String)*)(body: => T): T = {
     val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -231,8 +231,8 @@ class PipelineSpec extends AnyFunSuite {
     // UTF-8 byte order: U+FF61 < U+1F600; UTF-16 (java.lang.String) order
     // puts the surrogate pair of U+1F600 first
     val ids = Seq("\uFF61", "\uFF61\uFF61", "\uD83D\uDE00")
-    val feats = ids.map(i => (i, "same caption", Seq(1, 2, 3), 7L, 9L))
-      .toDF("id", "norm", "shs", "phash", "simhash")
+    val feats = ids.map(i => (i, s"c$i", "same caption", Seq(1, 2, 3), 7L, 9L))
+      .toDF("id", "chash", "norm", "shs", "phash", "simhash")
     val scored = (for (a <- ids; b <- ids if a < b)
       yield Pipeline.ScoredEdge(a, b, Classification.Duplicate, 1.0, "test")).toDS()
     val assign0 = Pipeline.cluster(feats, scored)
@@ -240,6 +240,45 @@ class PipelineSpec extends AnyFunSuite {
     val got = Pipeline.refine(assign0, feats, scored, cfg).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == ids.map(_ -> "\uFF61").toMap)
+  }
+
+  /** An image table of (image_id, bytes, caption, phash): all that
+    * [[Pipeline.features]] reads.
+    */
+  private def imageRows(rows: (String, String, String, Long)*) = {
+    val s = spark
+    import s.implicits._
+    rows.map { case (id, bytes, caption, phash) =>
+      (id, Option(bytes).map(_.getBytes("UTF-8")).orNull, caption, phash)
+    }.toDF("image_id", "bytes", "caption", "phash")
+  }
+
+  test("refine scores missing pairs through the verify cascade, null caption included") {
+    // one content hash: the exact pass stars r2 and r3 to r1, so (r2, r3)
+    // is a missing pair that refine scores itself; phashes share no
+    // 32-bit half, so the phash pass pairs nothing
+    val images = imageRows(("r1", "same", "a red car", 0x100000001L),
+      ("r2", "same", null, 0x200000002L), ("r3", "same", "a blue boat", 0x300000003L))
+    val feats = Pipeline.features(images, cfg)
+    val scored = Pipeline.classified(feats, Pipeline.candidates(feats, cfg), cfg)
+    val assign0 = Pipeline.cluster(feats, scored)
+    val got = Pipeline.refine(assign0, feats, scored, cfg).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map("r1" -> "r1", "r2" -> "r1", "r3" -> "r1"))
+  }
+
+  test("a null caption or null bytes is never a blocking key") {
+    // null captions with phashes that share no 32-bit half, and null bytes
+    // with unrelated captions: no pass may pair them
+    val images = imageRows(
+      ("n1", "b1", null, 0x100000001L), ("n2", "b2", null, 0x200000002L),
+      ("n3", "b3", null, 0x300000003L),
+      ("m1", null, "a red car parked outside", 0x1000000010L),
+      ("m2", null, "green mountains under snow", 0x2000000020L),
+      ("m3", null, "the old lighthouse keeper", 0x3000000030L))
+    val feats = Pipeline.features(images, cfg)
+    val pairs = Pipeline.candidates(feats, cfg).collect()
+    assert(pairs.isEmpty, pairs.mkString(", "))
   }
 
   test("fusion: every cluster yields one canonical; caption from members; singletons pass through") {

@@ -79,6 +79,24 @@ class PlanSpec extends AnyFunSuite {
       "small feature sides should broadcast into the pair join")
   }
 
+  test("verify is one kernel call in the generated classify code, with no Scala UDF") {
+    val images = spark.read.parquet(inputPath)
+    val cfg = DedupConfig()
+    val feats = graft.app.Pipeline.features(images, cfg)
+    val scored = graft.app.Pipeline.classified(feats,
+      graft.app.Pipeline.candidates(feats, cfg), cfg).toDF()
+    val udfs = scored.queryExecution.optimizedPlan.collect {
+      case p => p.expressions.flatMap(_.collect {
+        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
+      })
+    }.flatten
+    assert(udfs.isEmpty, s"classify must not contain Scala UDFs: $udfs")
+    // the three verdict fields share one kernel evaluation per row
+    val code = org.apache.spark.sql.execution.debug.codegenString(scored.queryExecution.executedPlan)
+    val calls = "graft\\.classify\\.Verify\\.classify\\(".r.findAllMatchIn(code).size
+    assert(calls == 1, s"expected one Verify.classify call in the generated code, saw $calls")
+  }
+
   test("feature stage is UDF-free and a single codegen span") {
     val images = spark.read.parquet(inputPath)
     val feats = graft.app.Pipeline.features(images, DedupConfig())

@@ -80,6 +80,19 @@ class ResumeStreamSpec extends AnyFunSuite {
       "completed stages must not be recomputed on resume")
   }
 
+  test("skew sidecar reports the substring pass's dropped probe keys") {
+    import spark.implicits._
+    val cfg = DedupConfig()
+    // 70 captions share their first 8 characters: one probe key over the cap
+    val images = (0 until 70)
+      .map(i => (s"s$i", Array(i.toByte), s"sunset over the bay, shot $i", i.toLong))
+      .toDF("image_id", "bytes", "caption", "phash")
+    val skew = Checkpoints.skewMetricsJson(graft.app.Pipeline.features(images, cfg), cfg)
+    val dropped = "\\{\"pass\":\"substring\",\"n_buckets\":\\d+,\"n_dropped_buckets\":(\\d+)".r
+      .findFirstMatchIn(skew).map(_.group(1).toLong)
+    assert(dropped.exists(_ >= 1), skew)
+  }
+
   test("load refuses a stage whose _SUCCESS marker or metrics sidecar is missing") {
     import spark.implicits._
     val work = tmpDir("graft-cp-load")
